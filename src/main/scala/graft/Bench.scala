@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Driver-run benchmark: one JSON line of steady-state per-query seconds.
   *
   * Methodology (VERDICT r1 "bench hygiene", r2 "bench robustness"): a
@@ -15,186 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Headline subset — representatives across every operator family.
-    * r3 additions: q_dedup_embedding (now the LSH-bucketed plan — the
-    * all-pairs form it replaced was quadratic and benchable only as a
-    * test anchor), q_quartiles (now boundary-broadcast, no global
-    * window), and both approximate ANN paths (now fully oracled).
-    * r5 additions (VERDICT r4 #1): every operator family added in r4 —
-    * semantic dedup, duplicate passages, top n-grams, token truncation,
-    * text normalization, stratified sampling, retention cohorts,
-    * exact-sum statistics, anti/semi joins, grouping sets, cadence,
-    * percent_rank, unpivot — so no shipped family escapes the perf gate.
-    * Still excluded: the tiny point lookups.
-    */
-  val headline: Seq[String] = Seq(
-    "q_past_due", "q_past_due_page", "q_past_due_total",
-    "q_monthly_summary", "q_customer_contact", "q_serialize_page",
-    "q_ingest_raw", "q_parse_money", "q_dim_build", "q_fk_resolve",
-    "q_upsert", "q_dedup_minhash", "q_dedup_jaccard", "q_dedup_simhash",
-    "q_dedup_embedding", "q_quartiles",
-    "q_knn_brute", "q_knn_topk_agg", "q_knn_lsh", "q_knn_ivf_learned",
-    "q_events_tumbling", "q_events_sliding", "q_events_session",
-    "q_sessionize_custom", "q_media_meta",
-    "q_asof_join", "q_range_join", "q_topn_per_group", "q_rollup",
-    "q_decontaminate", "q_repetition", "q_tfidf", "q_pack_sequences",
-    "q_semantic_dedup", "q_dedup_passages", "q_top_ngrams",
-    "q_truncate_tokens", "q_text_normalize", "q_stratified_sample",
-    "q_retention_cohort", "q_corr_by_currency", "q_anti_join",
-    "q_semi_join", "q_grouping_sets", "q_invoice_cadence",
-    "q_percent_rank", "q_unpivot",
-    // r5 additions (q_weighted_sample/q_quality_rules/q_token_entropy/
-    // q_docs_orc were the four the r5 advisor found missing).
-    "q_media_decode", "q_bloom_probe", "q_knn_quantized", "q_corpus_mix",
-    "q_winnow", "q_kmv_distinct", "q_dedup_winnow",
-    "q_stratified_sample_heap", "q_dedup_passages_clean",
-    "q_semantic_dedup_2level", "q_scd2", "q_quality_score",
-    "q_dedup_winnow_verified", "q_knn_quantized_rerank", "q_knn_ivf_sq8",
-    "q_weighted_sample", "q_quality_rules", "q_token_entropy",
-    "q_docs_orc",
-    // r6 additions (VERDICT r6 #1): every family shipped in r6, so the
-    // perf gate covers the full catalog again. Still excluded from the
-    // headline, deliberately: the tiny point lookups (q_invoice_lookup,
-    // q_customer_lookup, q_customer_exists — sub-50 ms, pure noise) and
-    // the streaming suites (no batch bench analog).
-    "q_hll_distinct", "q_heavy_hitters", "q_dedup_containment",
-    "q_dedup_passages_excise", "q_dedup_incremental", "q_funnel",
-    "q_k_anonymity", "q_skew_join", "q_knn_pq", "q_knn_ivf_pq",
-    "q_knn_text", "q_hash_vectorize", "q_lm_score", "q_langid_trained",
-    "q_mix_temperature", "q_chunk_overlap", "q_span_mask",
-    "q_hard_negatives",
-    // r7 additions, benched at birth.
-    "q_knn_ivf_pq_residual", "q_knn_matryoshka", "q_dedup_prefix",
-    "q_novelty", "q_zorder", "q_agg_merge", "q_lm_buckets",
-    "q_bigram_pmi", "q_outlier_docs", "q_shard_assign",
-    "q_kmv_intersect",
-    // r7 second wave, benched at birth.
-    "q_knn_binary", "q_knn_binary_rerank", "q_bm25", "q_dsir_weights",
-    "q_entity_match", "q_pagerank",
-    // r7 third wave, benched at birth.
-    "q_snapshot_diff", "q_compaction_bins", "q_corpus_profile",
-    "q_bitmap_distinct", "q_bloom_join", "q_hybrid_rrf", "q_cluster_rep",
-    "q_transition_matrix", "q_interval_merge",
-    // r7 fourth wave, benched at birth.
-    "q_hll_merge", "q_quantile_sketch", "q_cooccurrence", "q_dp_counts",
-    "q_late_data", "q_dedup_cc_star", "q_embedding_drift",
-    "q_knn_multiprobe", "q_trend_slope", "q_join_degree", "q_kappa",
-    "q_token_budget", "q_rolling_anomaly", "q_triangles",
-    "q_ivf_incremental", "q_ab_test", "q_path_trigrams",
-    "q_mutual_knn", "q_price_deciles", "q_purge_audit",
-    "q_pit_features", "q_pii_audit", "q_contrastive_pairs",
-    "q_graph_profile", "q_rate_limit", "q_dedup_pipeline",
-    "q_dedup_simhash_pairs", "q_heavy_hitters_by_lang", "q_apportion",
-    // r8 additions (VERDICT r7 #2): the unbenched queries that were
-    // arguably their own families — largest-output resample, iterative
-    // label propagation (vs the benched cc-star sibling), window
-    // frames, regex redaction, set ops, deterministic split.
-    "q_resample_ffill", "q_dedup_clusters", "q_running_totals",
-    "q_redact", "q_set_ops", "q_sample_split",
-    // r8 second wave, benched at birth.
-    "q_zone_stats", "q_zone_prune", "q_selfjoin_size", "q_kcore",
-    "q_bpe_merges", "q_bpe_segment", "q_ppr", "q_kmv_diff",
-    "q_media_entropy", "q_pca_power", "q_abtt_residual",
-    // r8 fourth wave, benched at birth.
-    "q_bfs_hops", "q_source_overlap", "q_range_plan",
-    // r9 additions, benched at birth.
-    "q_dedup_substring", "q_stitch_chunks", "q_domain_cap",
-    "q_table_profile",
-    // r9 wave 3, benched at birth.
-    "q_dedup_selfrepeat", "q_keyword_tags", "q_fk_orphans",
-    // r9 wave 4, benched at birth.
-    "q_substring_excise", "q_dedup_agreement", "q_ann_recall",
-    "q_dedup_thresholds", "q_bitext_margin",
-    // r9 wave 5, benched at birth.
-    "q_pagerank_weighted", "q_nb_classifier", "q_ann_recall_curve",
-    "q_oov_rate", "q_semdedup_prune", "q_quality_rank_blend",
-    "q_lm_kn", "q_psi_drift", "q_ppmi_window", "q_nb_eval",
-    // r9 wave 7, benched at birth.
-    "q_hits", "q_label_prop", "q_ks_drift", "q_doremi_mix",
-    "q_bpe_fertility",
-    // r9 wave 8, benched at birth.
-    "q_zipf_fit", "q_heaps_curve", "q_clustering_coeff",
-    "q_assortativity", "q_winsorize", "q_quantile_norm",
-    // r9 wave 9, benched at birth.
-    "q_token_gini", "q_charclass_profile", "q_burstiness",
-    "q_dup_rate_by_source", "q_rank_eval",
-    // r9 wave 10, benched at birth.
-    "q_hilbert", "q_embed_norm", "q_shard_diversity",
-    // r9 wave 11, benched at birth.
-    "q_hill_tail", "q_lm_by_source", "q_cluster_sizes",
-    "q_stopword_coverage",
-    // r9 wave 12, benched at birth.
-    "q_signal_corr", "q_degree_gini", "q_hub_share", "q_join_advisor",
-    // r9 wave 13, benched at birth.
-    "q_media_dedup", "q_media_chunks", "q_decay_counts",
-    // r9 wave 14, benched at birth.
-    "q_layout_compare",
-    // r9 wave 15, benched at birth.
-    "q_lexical_richness",
-    // r10 additions, benched at birth.
-    "q_media_neardup", "q_heaps_by_source",
-    // r10 wave 2, benched at birth.
-    "q_media_neardup_clusters", "q_media_hash_agreement",
-    // r10 wave 4, benched at birth.
-    "q_maxmatch_segment",
-    // r10 wave 5, benched at birth.
-    "q_modularity", "q_distinctive_terms", "q_pack_efficiency",
-    // r10 wave 6, benched at birth.
-    "q_unigram_segment",
-    // r10 wave 7, benched at birth.
-    "q_source_coverage", "q_label_noise",
-    // r10 wave 8, benched at birth.
-    "q_mutual_info",
-    // r10 wave 9, benched at birth.
-    "q_split_leakage",
-    // r10 wave 10, benched at birth.
-    "q_sorted_neighborhood",
-    // r10 wave 11, benched at birth.
-    "q_edge_cut",
-    // r10 wave 12, benched at birth.
-    "q_cusum", "q_dedup_planted_eval",
-    // r10 wave 13, benched at birth.
-    "q_lsh_scurve",
-    // r10 wave 14+, benched at birth.
-    "q_link_predict", "q_bootstrap_ci", "q_median_of_means",
-    "q_survival_km", "q_fs_scores", "q_curation_funnel",
-    "q_missing_mass", "q_source_kl", "q_theil_sen", "q_acf",
-    "q_mann_whitney", "q_psi_timeline", "q_wl_colors",
-    "q_rm3_rescore",
-    // r11 additions, benched at birth.
-    "q_nelson_aalen", "q_srm", "q_spearman", "q_t_closeness",
-    "q_mst", "q_ccf", "q_pettitt", "q_assoc_rules", "q_ql_dirichlet",
-    // r11 wave 2, benched at birth.
-    "q_textrank", "q_ktruss", "q_ljung_box",
-    // r11 wave 3, benched at birth.
-    "q_chi2_features", "q_sign_flip", "q_intrinsic_dim", "q_rake",
-    // r11 wave 4, benched at birth.
-    "q_conformal", "q_bh_fdr", "q_seasonality", "q_msprt",
-    "q_sql_cusum",
-    // r11 wave 6, benched at birth.
-    "q_isotonic", "q_diameter", "q_cdc_chunks", "q_mde",
-    "q_sinkhorn", "q_ols_multi", "q_ltv_cohorts", "q_eb_shrinkage",
-    // r12 additions, benched at birth.
-    "q_distinctive_phrases", "q_conformal_qr",
-    "q_mann_kendall", "q_logrank", "q_kendall_tau", "q_granger",
-    "q_did",
-    // r13 additions, benched at birth: the per-nation segmented
-    // forms of the sequential-stats family (partitioned windows).
-    "q_mann_kendall_by_nation", "q_kendall_tau_by_nation",
-    "q_granger_by_nation",
-    // r13 wave 4: the forecasting family + the conversion z-test.
-    "q_ses", "q_holt", "q_prop_ztest",
-    // r13 wave 5: the survival-regression member.
-    "q_cox_hr",
-    // r13 wave 6: paired-binary test + classifier ranking quality.
-    "q_mcnemar", "q_nb_auc",
-    // r13 wave 7: kernel-free embedding-distribution drift +
-    // label-coherence silhouette.
-    "q_embed_energy", "q_silhouette",
-    // r14: per-nation forecasting (segment-keyed sorted folds).
-    "q_ses_by_nation", "q_holt_by_nation")
-
-  /** Every oracled query NOT in [[headline]], mapped to the benched
+  /** Every oracled query left out of [[headline]], mapped to the benched
     * representative of its operator family (VERDICT r7 #2: "no oracled
     * query without a named benched representative"). These are cheap
     * variants — same plan shape, same operators, smaller or equal work
@@ -311,6 +134,14 @@ object Bench {
     // prune of the collected codebook and one more DP round.
     "q_unigram_prune" -> "q_unigram_segment")
 
+  /** The benched queries: every catalog query that is not a cheap
+    * variant in [[familyRep]]. Derived, so a new catalog query is
+    * benched at birth unless it names a representative. Declared
+    * after [[familyRep]] because object vals initialize in order.
+    */
+  val headline: Seq[String] =
+    (SparkEntry.queries.keySet -- familyRep.keySet).toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     // Optional args: builder-local subset runs (driver passes none).
     val subset = if (args.isEmpty) headline else headline.filter(args.toSet)
@@ -335,44 +166,37 @@ object Bench {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
-    // SPARK_GRAFT_CLEARCACHE=1 (sf1 marathon hygiene, r10): catalog
-    // queries are self-contained, but several deliberately leave a
-    // frame cached for their own multi-leg plan; across a 217-query
-    // single-JVM run at 10× data that accumulation thrashes storage +
-    // GC and inflated heavy queries up to 20× vs their isolated-JVM
-    // records (PLANS.md "sf1 full-run probe, contaminated"). Clearing
-    // SQL cache between queries (JIT stays warm) makes a full-catalog
-    // scale probe honest; the DEFAULT (off) keeps the sf0.1 anchor
-    // methodology bit-compatible with every prior round.
-    val clearCache = sys.env.getOrElse("SPARK_GRAFT_CLEARCACHE", "0") == "1"
     // r17 (VERDICT r16 #2): between-query storage-residency gate,
     // OUTSIDE the timed region. Two effects, both deliberate:
     //   1. a query leaving unexpected resident blocks is reported as a
     //      LEAK (stderr + cache_leaks in BENCH_SUMMARY.json;
     //      tools/bench.sh fails on it) — LocalFinish.release's
     //      call-site convention is now mechanically enforced;
-    //   2. every timed pass starts cache-cold: cross-query AND
-    //      cross-pass cache reuse (the r10 warm-cache artifact class)
-    //      is structurally gone. This is a METHODOLOGY change vs the
-    //      ≤r16 anchors (BASELINE.md r17 note); SPARK_GRAFT_SWEEP=0
-    //      restores the old behavior for A/B attribution.
-    val sweep = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "1") == "1"
+    //   2. every timed pass starts cache-cold: the sweep clears the SQL
+    //      cache and every resident RDD, so cross-query AND cross-pass
+    //      cache reuse (the r10 warm-cache artifact class) is
+    //      structurally gone (BASELINE.md r17 note).
+    // A query that throws is timed as -1, left out of the total and
+    // named in `failed` (tools/bench.sh fails on it, like a leak).
     val leaked = scala.collection.mutable.LinkedHashSet[String]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def exec(name: String): Double = {
       val t0 = System.nanoTime()
-      val failed =
+      val ok =
         try {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          false
-        } catch { case _: Throwable => true }
+          true
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] FAILED $name: $e")
+            failed += name
+            false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
-      if (clearCache) { spark.catalog.clearCache(); System.gc() }
-      if (sweep) {
-        val n = CacheHygiene.check(spark, name)
-        if (n > 0 && !CacheHygiene.expectedResidue(name)) leaked += name
-      }
-      if (failed) -1.0 else dt
+      val n = CacheHygiene.check(spark, name)
+      if (n > 0 && !CacheHygiene.expectedResidue(name)) leaked += name
+      if (ok) dt else -1.0
     }
 
     // SPARK_GRAFT_PASSES / SPARK_GRAFT_WARMUP: the sf1 scale probe
@@ -423,10 +247,10 @@ object Bench {
     // (metric, value, unit, queries, sf) with the extras TRAILING, in
     // case the parser is prefix-order-sensitive.
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
-    val leakStr = leaked.toSeq.sorted
+    def jlist(ns: Iterable[String]): String = ns.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":${jmap(slowest)},"sf":"$sfDir","n_queries":${results.size},"passes":$nPasses,"full_map":"bench_out.json","min_map":"bench_min.json","cache_leaks":$leakStr}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":${jmap(slowest)},"sf":"$sfDir","n_queries":${results.size},"passes":$nPasses,"full_map":"bench_out.json","min_map":"bench_min.json","cache_leaks":${jlist(leaked)},"failed":${jlist(failed)}}"""
     // Belt and braces for the driver parse (VERDICT r9 #2, fourth round
     // of `parsed: null`): the same compact line also lands in a
     // dedicated file, so even if stdout hygiene regresses the record

@@ -28,7 +28,7 @@ object CacheHygiene {
 
   /** Queries documented to leave blocks resident at materialization
     * time, measured by the r17 orphan probe (PLANS.md "r17
-    * cache-hygiene probe", tools/OrphanProbe.scala). Two classes:
+    * cache-hygiene probe"). Two classes:
     *
     *  1. REFERENCED residue — the returned lazy plan reads a frame
     *     the operator cached/checkpointed for its own multi-leg
@@ -91,21 +91,21 @@ object CacheHygiene {
     "q_dedup_incremental", "q_hybrid_rrf", "q_ivf_incremental",
     "q_mutual_knn", "q_edge_cut")
 
-  /** Unpersist every resident RDD and return one description line per
-    * block that was resident — empty means the query left the session
-    * clean. Descriptions carry the RDD id + name (the cached frame's
-    * first line) for leak attribution.
+  /** Clear the SQL cache, unpersist every resident RDD and return one
+    * description line per block that was resident — empty means the
+    * query left the session clean. Descriptions carry the RDD id +
+    * name (the cached frame's first line) for leak attribution.
     */
   def sweep(spark: SparkSession): Seq[String] = {
     val resident = spark.sparkContext.getPersistentRDDs.toSeq
     // Cached Dataset blocks live in the SQL cache; clear it FIRST so
     // its InMemoryRelation entries can't re-materialize, then drop the
     // raw RDD blocks (localCheckpoints register here, not in the SQL
-    // cache).
-    if (resident.nonEmpty) {
-      spark.sharedState.cacheManager.clearCache()
-      resident.foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
-    }
+    // cache). The SQL cache is cleared even when nothing is resident:
+    // a cache() whose plan never ran registers an entry but no blocks,
+    // and would otherwise be reused by the next query.
+    spark.sharedState.cacheManager.clearCache()
+    resident.foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
     resident.map { case (id, rdd) =>
       val nm = Option(rdd.name).getOrElse("").linesIterator
         .take(1).mkString.take(120)

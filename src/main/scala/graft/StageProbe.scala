@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** STAGE-LEVEL wall-time attribution for the catalog's slowest
@@ -187,259 +187,6 @@ object StageProbe {
         val s3 = timed("full:exactJaccardPairs")(
           Dedup.exactJaccardPairs(corpus).count())
         Seq(s1, s2, s3)
-      }),
-      // r17 lean-fold A/B: alternating in-JVM pairs of the SHIPPED
-      // collect_set fold vs the REPLACED self-join form (3 pairs,
-      // B first so warm-up bias favors the old form — a win must
-      // overcome it). Same-JVM alternation makes the window symmetric.
-      "leanfold_ab" -> ((spark: SparkSession, d: String) => {
-        import graft.queries.Tables
-        import graft.operators.Dedup
-        val li = Tables.lineitem(spark, d)
-        def mstNew() = graft.operators.Graph.supplierAffinityEdges(li)
-        def mstOld() = {
-          val pairs = li
-            .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s"))
-            .distinct()
-          pairs.as("x").join(pairs.as("y"),
-              col("x.ok") === col("y.ok") && col("x.s") < col("y.s"))
-            .groupBy(col("x.s").as("src"), col("y.s").as("dst"))
-            .agg((-count(lit(1))).as("w"))
-        }
-        def corpus = Dedup.withNearDuplicates(docs(spark, d))
-        def jacNew() = Dedup.exactJaccardPairs(corpus)
-        def jacOld() = {
-          val shAll = Dedup.shingleIndex(corpus).cache()
-          val inter = shAll.as("a")
-            .join(shAll.as("b"),
-              col("a.shingle") === col("b.shingle") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("doc_a"),
-              col("b.doc_id").as("doc_b"))
-            .agg(count(lit(1)).as("intersect_n"))
-          val sz = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-          inter
-            .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-            .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
-            .withColumn("union_n",
-              col("sa.sz") + col("sb.sz") - col("intersect_n"))
-            .filter(col("intersect_n") * 10 >= col("union_n") * 7)
-            .select(col("doc_a"), col("doc_b"), col("intersect_n"),
-              col("union_n"))
-        }
-        import graft.functions.TextOps
-        def winNew() = Dedup.winnowCandidatePairs(corpus)
-        def winOld() = {
-          val fps = corpus.select(col("doc_id"),
-            explode(TextOps.winnowNative(col("text"), 3, 4)).as("fp"))
-          val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-            .filter(col("df") <= 50).select(col("fp"))
-          val pruned = fps.join(rare, Seq("fp"))
-          val a = pruned.select(col("fp"), col("doc_id").as("doc_a"))
-          val b = pruned.select(col("fp"), col("doc_id").as("doc_b"))
-          a.join(b, Seq("fp"))
-            .filter(col("doc_a") < col("doc_b"))
-            .groupBy(col("doc_a"), col("doc_b"))
-            .agg(count(lit(1)).as("shared_fps"))
-            .filter(col("shared_fps") >= 2)
-        }
-        (1 to 3).flatMap { i =>
-          val b1 = timed(s"mst:OLD selfjoin p$i")(mstOld().count())
-          spark.sqlContext.clearCache()
-          val a1 = timed(s"mst:NEW fold     p$i")(mstNew().count())
-          spark.sqlContext.clearCache()
-          val b2 = timed(s"jac:OLD selfjoin p$i")(jacOld().count())
-          spark.sqlContext.clearCache()
-          val a2 = timed(s"jac:NEW fold     p$i")(jacNew().count())
-          spark.sqlContext.clearCache()
-          val b3 = timed(s"win:OLD selfjoin p$i")(winOld().count())
-          spark.sqlContext.clearCache()
-          val a3 = timed(s"win:NEW fold     p$i")(winNew().count())
-          spark.sqlContext.clearCache()
-          Seq(b1, a1, b2, a2, b3, a3)
-        }
-      }),
-      // r17 prefix-fold A/B (the leanfold_ab device for the one fold
-      // that shipped without a same-JVM measurement): full shipped
-      // prefixFilteredPairs vs the full replaced form whose candidate
-      // stage self-joins the prefix postings. OLD first each pair so
-      // warm-up bias favors it — a NEW win must overcome it.
-      "prefix_ab" -> ((spark: SparkSession, d: String) => {
-        import graft.operators.Dedup
-        import org.apache.spark.sql.expressions.Window
-        def corpus = Dedup.withNearDuplicates(docs(spark, d))
-        def preNew() = Dedup.prefixFilteredPairs(corpus)
-        def preOld() = {
-          val num = 7; val den = 10
-          val shAll = Dedup.shingleIndex(corpus).cache()
-          val sz = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-          val dfreq = shAll.groupBy(col("shingle"))
-            .agg(count(lit(1)).as("df"))
-          val szc = shAll.groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("szc"))
-          val pref = shAll.join(dfreq, Seq("shingle"))
-            .withColumn("r", row_number().over(
-              Window.partitionBy(col("doc_id"))
-                .orderBy(col("df"), col("shingle"))))
-            .join(szc, Seq("doc_id"))
-            .filter(col("r") <=
-              col("szc") - floor((col("szc") * num + (den - 1)) / den) + 1)
-            .select(col("shingle"), col("doc_id"))
-          val cand = pref.as("pa")
-            .join(pref.as("pb"),
-              col("pa.shingle") === col("pb.shingle") &&
-                col("pa.doc_id") < col("pb.doc_id"))
-            .select(col("pa.doc_id").as("doc_a"),
-              col("pb.doc_id").as("doc_b"))
-            .distinct()
-            .join(sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")),
-              Seq("doc_a"))
-            .join(sz.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")),
-              Seq("doc_b"))
-            .filter(least(col("sz_a"), col("sz_b")) * den >=
-              greatest(col("sz_a"), col("sz_b")) * num)
-            .select(col("doc_a"), col("doc_b"))
-          val inter = cand
-            .join(shAll.as("sa"), col("doc_a") === col("sa.doc_id"))
-            .join(shAll.as("sb"),
-              col("doc_b") === col("sb.doc_id") &&
-                col("sa.shingle") === col("sb.shingle"))
-            .groupBy(col("doc_a"), col("doc_b"))
-            .agg(count(lit(1)).as("intersect_n"))
-          inter
-            .join(sz.as("sa2"), col("doc_a") === col("sa2.doc_id"))
-            .join(sz.as("sb2"), col("doc_b") === col("sb2.doc_id"))
-            .withColumn("union_n",
-              col("sa2.sz") + col("sb2.sz") - col("intersect_n"))
-            .filter(col("intersect_n") * den >= col("union_n") * num)
-            .select(col("doc_a"), col("doc_b"), col("intersect_n"),
-              col("union_n"))
-        }
-        (1 to 3).flatMap { i =>
-          val b = timed(s"prefix:OLD selfjoin p$i")(preOld().count())
-          spark.sqlContext.clearCache()
-          val a = timed(s"prefix:NEW fold     p$i")(preNew().count())
-          spark.sqlContext.clearCache()
-          Seq(b, a)
-        }
-      }),
-      // r17 scratch: price the defensive edges.distinct() every Graph
-      // operator runs on purchaseEdges, whose output is distinct by
-      // construction (disjoint even/odd endpoint key spaces).
-      "edge_distinct_ab" -> ((spark: SparkSession, d: String) => {
-        import graft.queries.Tables
-        def pe = graft.operators.Graph.purchaseEdges(
-          Tables.orders(spark, d), Tables.lineitem(spark, d))
-        (1 to 3).flatMap { i =>
-          val a = timed(s"edges:WITH distinct p$i")(
-            pe.select(col("src"), col("dst")).distinct()
-              .localCheckpoint().count())
-          spark.sqlContext.clearCache()
-          val b = timed(s"edges:NO distinct   p$i")(
-            pe.select(col("src"), col("dst"))
-              .localCheckpoint().count())
-          spark.sqlContext.clearCache()
-          Seq(a, b)
-        }
-      }),
-      // r17 edgesDistinct query-level ABAB: the OLD form (default
-      // param = defensive distinct) vs the NEW catalog form
-      // (edgesDistinct/edgesCanonical = true) live in one binary, so
-      // the alternating device needs no worktree. OLD first each
-      // pair; representative one query per operator family.
-      "edgedistinct_query_ab" -> ((spark: SparkSession, d: String) => {
-        import graft.queries.Tables
-        import graft.operators.{Graph, Itemsets}
-        def o = Tables.orders(spark, d)
-        def li = Tables.lineitem(spark, d)
-        def pe = Graph.purchaseEdges(o, li)
-        def pp = Itemsets.pairEdges(li, "l_orderkey", "l_partkey")
-        def lseeds = Tables.supplier(spark, d)
-          .filter(col("s_suppkey") % 5 === 0)
-          .select((col("s_suppkey") * 2L + 1L).as("node"),
-            col("s_nationkey").cast("long").as("label"))
-        (1 to 3).flatMap { i =>
-          val b1 = timed(s"lp:OLD distinct   p$i")(
-            Graph.labelPropagation(pe, lseeds).count())
-          spark.sqlContext.clearCache()
-          val a1 = timed(s"lp:NEW skip       p$i")(
-            Graph.labelPropagation(pe, lseeds,
-              edgesDistinct = true).count())
-          spark.sqlContext.clearCache()
-          val b2 = timed(s"tri:OLD distinct  p$i")(
-            Graph.triangles(pp).count())
-          spark.sqlContext.clearCache()
-          val a2 = timed(s"tri:NEW skip      p$i")(
-            Graph.triangles(pp, edgesDistinct = true).count())
-          spark.sqlContext.clearCache()
-          val b3 = timed(s"mst:OLD canon     p$i")(
-            Graph.boruvkaTrace(Graph.supplierAffinityEdges(li)).count())
-          spark.sqlContext.clearCache()
-          val a3 = timed(s"mst:NEW skip      p$i")(
-            Graph.boruvkaTrace(Graph.supplierAffinityEdges(li),
-              edgesCanonical = true).count())
-          spark.sqlContext.clearCache()
-          Seq(b1, a1, b2, a2, b3, a3)
-        }
-      }),
-      // r17 bm25 qterms A/B: the derived query panel is a subtree the
-      // scoring chain references twice (distinct semi-join build +
-      // score join) — each reference re-runs the corpus scan+split
-      // that derives it. Variant B checkpoints the panel eagerly
-      // (|queries|·3 rows) so both references read blocks. OLD first.
-      "bm25_qterms_ab" -> ((spark: SparkSession, d: String) => {
-        import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.types.DecimalType
-        def chain(checkpointQt: Boolean): DataFrame = {
-          val k = 10; val k1 = 1.2; val b = 0.75
-          val toks = docs(spark, d)
-            .select(col("doc_id"), split(col("text"), " ").as("t"))
-          val qt0 = toks
-            .filter(col("doc_id") % 100 === 0 && col("doc_id") < 1000000L)
-            .select(col("doc_id").as("query_id"),
-              explode(slice(array_distinct(col("t")), 1, 3)).as("token"))
-          val qterms = if (checkpointQt) qt0.localCheckpoint() else qt0
-          val stats = toks.agg(count(lit(1)).as("n_docs"),
-            sum(size(col("t")).cast("long")).as("total_dl"))
-          val tok = toks
-            .select(col("doc_id"), size(col("t")).as("dl"),
-              explode(col("t")).as("token"))
-            .join(broadcast(qterms.select("token").distinct()),
-              Seq("token"))
-          val tf = tok.groupBy(col("doc_id"), col("token"))
-            .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-          val df_ = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-          val avgdl = col("total_dl").cast("double") / col("n_docs")
-          val idf = log((col("n_docs") - col("df") + 0.5)
-            / (col("df") + 0.5) + 1.0)
-          val termScore = tf
-            .join(broadcast(df_), Seq("token"))
-            .join(broadcast(qterms), Seq("token"))
-            .crossJoin(broadcast(stats))
-            .select(col("query_id"), col("doc_id"),
-              (idf * (col("tf") * (lit(k1) + 1.0)) /
-                (col("tf") + lit(k1) * (lit(1.0) - b
-                  + lit(b) * col("dl") / avgdl))).as("ts"))
-          termScore.groupBy(col("query_id"), col("doc_id"))
-            .agg(round(aggregate(sort_array(collect_list(col("ts"))),
-              lit(0.0), _ + _), 6).cast(DecimalType(18, 6)).as("score"))
-            .withColumn("rnk", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("query_id"))
-                .orderBy(col("score").desc, col("doc_id").asc)))
-            .filter(col("rnk") <= k)
-            .select(col("query_id"), col("doc_id"), col("rnk"),
-              col("score"))
-        }
-        (1 to 3).flatMap { i =>
-          val b1 = timed(s"bm25:OLD lazy qt  p$i")(chain(false).count())
-          spark.sqlContext.clearCache()
-          CacheHygiene.sweep(spark)
-          val a1 = timed(s"bm25:NEW ckpt qt  p$i")(chain(true).count())
-          spark.sqlContext.clearCache()
-          CacheHygiene.sweep(spark)
-          Seq(b1, a1)
-        }
       }),
       // q_dup_rate_by_source (VERDICT r15 #3): pair generation vs the
       // id-mapping/aggregation readout on top of it.

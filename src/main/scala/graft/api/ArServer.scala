@@ -89,6 +89,29 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
   private def badRequest(ex: HttpExchange, why: String): Unit =
     respond(ex, 400, jobj(Seq("detail" -> why)))
 
+  /** `limit`/`offset` validated the way FastAPI validates typed query
+    * parameters: absent → the default; not an integer or out of range
+    * → Left(detail), answered 422. `offset` is always ≥ 0.
+    */
+  private def pageParams(p: Map[String, String], defLimit: Int,
+                         minLimit: Int, maxLimit: Int)
+      : Either[String, (Int, Int)] = {
+    def int(name: String, default: Int, lo: Int, hi: Int)
+        : Either[String, Int] =
+      p.get(name).fold[Either[String, Int]](Right(default)) { v =>
+        v.toIntOption.filter(i => i >= lo && i <= hi).toRight(
+          if (hi == Int.MaxValue) s"$name must be an integer >= $lo"
+          else s"$name must be an integer in $lo..$hi")
+      }
+    for {
+      limit <- int("limit", defLimit, minLimit, maxLimit)
+      offset <- int("offset", 0, 0, Int.MaxValue)
+    } yield (limit, offset)
+  }
+
+  private def unprocessable(ex: HttpExchange, why: String): Unit =
+    respond(ex, 422, jobj(Seq("detail" -> why)))
+
   private def handle(path: String)(f: HttpExchange => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try f(ex)
@@ -109,20 +132,18 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
   /** GET /invoices/past-due (`app/api/invoices.py:41-138`). */
   handle("/invoices/past-due") { ex =>
     val p = params(ex)
-    val limit = p.get("limit").map(_.toInt).getOrElse(50)
-    val offset = p.get("offset").map(_.toInt).getOrElse(0)
-    if (limit < 1 || limit > 200 || offset < 0)
-      badRequest(ex, "limit must be 1..200, offset >= 0")
-    else {
-      val asOf = p.get("as_of")
-        .getOrElse(java.time.LocalDate.now(
-          java.time.ZoneId.of("America/New_York")).toString)
-      val desc = p.get("sort").contains("due_date.desc") // else asc (ref default)
-      val env = PastDue.servePage(invoices, customers,
-        lit(asOf).cast("date"), limit, offset, desc)
-      respond(ex, 200,
-        s"""{"items": [${env.items.map(rowObj(_, pastDueCols)).mkString(", ")}], """ +
-          s""""total": ${env.total}, "limit": $limit, "offset": $offset}""")
+    pageParams(p, defLimit = 50, minLimit = 1, maxLimit = 200) match {
+      case Left(why) => unprocessable(ex, why)
+      case Right((limit, offset)) =>
+        val asOf = p.get("as_of")
+          .getOrElse(java.time.LocalDate.now(
+            java.time.ZoneId.of("America/New_York")).toString)
+        val desc = p.get("sort").contains("due_date.desc") // else asc (ref default)
+        val env = PastDue.servePage(invoices, customers,
+          lit(asOf).cast("date"), limit, offset, desc)
+        respond(ex, 200,
+          s"""{"items": [${env.items.map(rowObj(_, pastDueCols)).mkString(", ")}], """ +
+            s""""total": ${env.total}, "limit": $limit, "offset": $offset}""")
     }
   }
 
@@ -167,17 +188,19 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
   /** GET /customers/contact (`app/api/customers.py:52-119`). */
   handle("/customers/contact") { ex =>
     val p = params(ex)
-    p.get("name") match {
-      case None => badRequest(ex, "name is required")
-      case Some(name) =>
+    val paging = pageParams(p, defLimit = 10, minLimit = 0,
+      maxLimit = Int.MaxValue)
+    (p.get("name"), paging) match {
+      case (None, _) => badRequest(ex, "name is required")
+      case (_, Left(why)) => unprocessable(ex, why)
+      case (Some(name), Right((limit, offset))) =>
         val n = CustomerContact.exists(customers, name)
           .collect().head.getLong(0)
         if (n == 0) notFound(ex, "Customer")
         else {
           val page = CustomerContact.contacts(customers, invoices, name,
             dimCols = Seq("contact_name", "contact_phone", "contact_email"),
-            limit = p.get("limit").map(_.toInt).getOrElse(10),
-            offset = p.get("offset").map(_.toInt).getOrElse(0))
+            limit = limit, offset = offset)
           val (rows, total) = CustomerContact.contactsEnvelope(page)
           val contacts = rows.collect().map(rowObj(_,
             Seq("contact_name", "contact_email", "contact_phone",

@@ -86,8 +86,8 @@ object Graph {
       (LocalFinish.allLong(e0, "src", "dst") || allStr)
     val e = if (eligible) e0.localCheckpoint() else e0
     if (eligible && allStr) {
-      LocalFinish.collectStringPairsBounded(e, "src", "dst",
-          localEdgeCap) match {
+      LocalFinish.collectStringPairsBounded(e, localEdgeCap,
+          "src", "dst") match {
         case Some((flat, names)) =>
           Console.err.println("[graft] pageRank: driver finish (str)")
           LocalFinish.release(e)
@@ -96,8 +96,8 @@ object Graph {
         case None => // over cap: distributed loop below, on the blocks
       }
     } else if (eligible) {
-      LocalFinish.collectPairsBounded(e, "src", "dst",
-          localEdgeCap) match {
+      LocalFinish.collectLongsBounded(e, localEdgeCap,
+          "src", "dst") match {
         case Some(flat) =>
           Console.err.println("[graft] pageRank: driver finish")
           LocalFinish.release(e) // collected; blocks are dead (ADVICE r15)
@@ -201,8 +201,8 @@ object Graph {
       LocalFinish.allLong(sd, "node")
     val e = if (eligible) e0.localCheckpoint() else e0
     if (eligible) {
-      (LocalFinish.collectPairsBounded(e, "src", "dst", localEdgeCap),
-       LocalFinish.collectColBounded(sd, "node", localEdgeCap)) match {
+      (LocalFinish.collectLongsBounded(e, localEdgeCap, "src", "dst"),
+       LocalFinish.collectLongsBounded(sd, localEdgeCap, "node")) match {
         case (Some(flat), Some(seedArr)) =>
           Console.err.println("[graft] personalizedPageRank: driver finish")
           LocalFinish.release(e) // collected; blocks are dead (ADVICE r15)
@@ -288,8 +288,8 @@ object Graph {
       LocalFinish.allLong(e0, "src", "dst", "weight")
     val e = if (eligible) e0.localCheckpoint() else e0
     if (eligible) {
-      LocalFinish.collectTriplesBounded(e, "src", "dst", "weight",
-          localEdgeCap) match {
+      LocalFinish.collectLongsBounded(e, localEdgeCap,
+          "src", "dst", "weight") match {
         case Some(flat) =>
           Console.err.println("[graft] weightedPageRank: driver finish")
           LocalFinish.release(e) // collected; blocks are dead (ADVICE r15)
@@ -589,8 +589,8 @@ object Graph {
                                          releaseOnDriverFinish: Boolean =
                                            false): DataFrame = {
     if (eligible) {
-      (LocalFinish.collectPairsBounded(ed, "src", "dst", localEdgeCap),
-       LocalFinish.collectColBounded(sd, "node", localEdgeCap)) match {
+      (LocalFinish.collectLongsBounded(ed, localEdgeCap, "src", "dst"),
+       LocalFinish.collectLongsBounded(sd, localEdgeCap, "node")) match {
         case (Some(flat), Some(seedArr)) =>
           Console.err.println("[graft] bfsHops: driver finish")
           if (releaseOnDriverFinish) LocalFinish.release(ed)
@@ -662,8 +662,8 @@ object Graph {
       LocalFinish.allLong(sd, "node")
     val ed = if (eligible) ed0.localCheckpoint() else ed0
     if (eligible) {
-      (LocalFinish.collectPairsBounded(ed, "src", "dst", localEdgeCap),
-       LocalFinish.collectColBounded(sd, "node", localEdgeCap)) match {
+      (LocalFinish.collectLongsBounded(ed, localEdgeCap, "src", "dst"),
+       LocalFinish.collectLongsBounded(sd, localEdgeCap, "node")) match {
         case (Some(flat), Some(seedArr)) =>
           Console.err.println("[graft] diameterTwoSweep: driver finish")
           LocalFinish.release(ed) // collected; blocks are dead (ADVICE r15)
@@ -743,8 +743,8 @@ object Graph {
     val eligible = localEdgeCap > 0 && LocalFinish.allLong(e0, "src", "dst")
     val e = if (eligible) e0.localCheckpoint() else e0
     if (eligible) {
-      LocalFinish.collectPairsBounded(e, "src", "dst",
-          localEdgeCap) match {
+      LocalFinish.collectLongsBounded(e, localEdgeCap,
+          "src", "dst") match {
         case Some(flat) =>
           Console.err.println("[graft] hits: driver finish")
           LocalFinish.release(e) // collected; blocks are dead (ADVICE r15)

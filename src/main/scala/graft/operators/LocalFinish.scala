@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -41,28 +41,21 @@ object LocalFinish {
   def allLong(df: DataFrame, cols: String*): Boolean =
     cols.forall(c => df.schema(c).dataType == LongType)
 
-  /** Collect a two-long-column frame as a flat stride-2 array. */
-  private def collectPairs(df: DataFrame, a: String, b: String): Array[Long] = {
-    val rows = df.select(col(a), col(b)).collect()
-    val out = new Array[Long](rows.length * 2)
-    var i = 0
-    while (i < rows.length) {
-      out(2 * i) = rows(i).getLong(0)
-      out(2 * i + 1) = rows(i).getLong(1)
-      i += 1
-    }
-    out
-  }
+  /** Collect long columns as one flat row-major array: row i's value
+    * for `cols(j)` sits at `i * cols.size + j` (stride 2 for edge
+    * pairs, 3 for weighted edges, 1 for a seed column).
+    */
+  def collectLongs(df: DataFrame, cols: String*): Array[Long] =
+    toLongs(df.select(cols.map(col): _*).collect(), cols.size)
 
-  /** BOUNDED two-long-column collect for driver-finish gates (r15):
-    * the stride-2 twin of [[collectColBounded]]. A parallel count()
-    * gates, then a parallel collect() reads the SAME frame — the
-    * second action skips the recomputation of any shuffle map stage
-    * in the frame's lineage (Spark reuses shuffle files across jobs
-    * on one RDD), so the pair cost is ~one reduce pass over an
-    * already-written shuffle. The driver path still skips the
-    * distributed substrate (join + repartition + sort + cache)
-    * entirely.
+  /** BOUNDED [[collectLongs]] for driver-finish gates (r15); None means
+    * "over cap — take the distributed path". A parallel count() gates,
+    * then a parallel collect() reads the SAME frame — the second action
+    * skips the recomputation of any shuffle map stage in the frame's
+    * lineage (Spark reuses shuffle files across jobs on one RDD), so the
+    * pair cost is ~one reduce pass over an already-written shuffle. The
+    * driver path still skips the distributed substrate (join +
+    * repartition + sort + cache) entirely.
     *
     * NOT limit(cap+1): a capped collect plans CollectLimitExec, whose
     * executeCollect gathers partitions in SERIAL scale-up waves
@@ -70,40 +63,28 @@ object LocalFinish {
     * a 2x regression on the graph family (pagerank 22 → 42 s cold)
     * versus the parallel count+collect pair.
     */
-  def collectPairsBounded(df: DataFrame, a: String, b: String,
-                          cap: Long): Option[Array[Long]] = {
-    val proj = df.select(col(a), col(b))
-    if (proj.count() > cap) None
-    else {
-      val rows = proj.collect()
-      val out = new Array[Long](rows.length * 2)
-      var i = 0
-      while (i < rows.length) {
-        out(2 * i) = rows(i).getLong(0)
-        out(2 * i + 1) = rows(i).getLong(1)
-        i += 1
-      }
-      Some(out)
-    }
+  def collectLongsBounded(df: DataFrame, cap: Long,
+                          cols: String*): Option[Array[Long]] =
+    collectBounded(df, cap, cols)(toLongs(_, cols.size))
+
+  /** The count gate shared by the bounded collects. */
+  private def collectBounded[T](df: DataFrame, cap: Long, cols: Seq[String])
+      (read: Array[Row] => T): Option[T] = {
+    val proj = df.select(cols.map(col): _*)
+    if (proj.count() > cap) None else Some(read(proj.collect()))
   }
 
-  /** BOUNDED one-long-column collect for driver-finish gates (r15):
-    * count-gate + collect on the same frame (see
-    * [[collectPairsBounded]]'s CollectLimitExec note for why this is
-    * NOT a limit(cap+1)); None means "over cap — take the
-    * distributed path".
-    */
-  def collectColBounded(df: DataFrame, a: String,
-                        cap: Long): Option[Array[Long]] = {
-    val proj = df.select(col(a))
-    if (proj.count() > cap) None
-    else {
-      val rows = proj.collect()
-      val out = new Array[Long](rows.length)
-      var i = 0
-      while (i < rows.length) { out(i) = rows(i).getLong(0); i += 1 }
-      Some(out)
+  private def toLongs(rows: Array[Row], width: Int): Array[Long] = {
+    val out = new Array[Long](rows.length * width)
+    var k = 0
+    var r = 0
+    while (r < rows.length) {
+      val row = rows(r)
+      var j = 0
+      while (j < width) { out(k) = row.getLong(j); j += 1; k += 1 }
+      r += 1
     }
+    out
   }
 
   /** Drop the storage blocks behind a `localCheckpoint`ed frame whose
@@ -125,51 +106,6 @@ object LocalFinish {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** Collect one long column as a flat array. */
-  private def collectCol(df: DataFrame, a: String): Array[Long] = {
-    val rows = df.select(col(a)).collect()
-    val out = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) { out(i) = rows(i).getLong(0); i += 1 }
-    out
-  }
-
-  /** BOUNDED three-long-column collect — stride-3 twin of
-    * [[collectPairsBounded]] (same count-gate + collect shape), for
-    * the weighted-edge driver gates. */
-  def collectTriplesBounded(df: DataFrame, a: String, b: String,
-                            c: String, cap: Long): Option[Array[Long]] = {
-    val proj = df.select(col(a), col(b), col(c))
-    if (proj.count() > cap) None
-    else {
-      val rows = proj.collect()
-      val out = new Array[Long](rows.length * 3)
-      var i = 0
-      while (i < rows.length) {
-        out(3 * i) = rows(i).getLong(0)
-        out(3 * i + 1) = rows(i).getLong(1)
-        out(3 * i + 2) = rows(i).getLong(2)
-        i += 1
-      }
-      Some(out)
-    }
-  }
-
-  /** Collect a three-long-column frame as a flat stride-3 array. */
-  private def collectTriples(df: DataFrame, a: String, b: String,
-                             c: String): Array[Long] = {
-    val rows = df.select(col(a), col(b), col(c)).collect()
-    val out = new Array[Long](rows.length * 3)
-    var i = 0
-    while (i < rows.length) {
-      out(3 * i) = rows(i).getLong(0)
-      out(3 * i + 1) = rows(i).getLong(1)
-      out(3 * i + 2) = rows(i).getLong(2)
-      i += 1
-    }
-    out
-  }
 
   /** Spark's `round(double, scale)` EXACTLY — RoundBase goes through
     * the shortest-decimal-repr BigDecimal with HALF_UP, which is NOT
@@ -213,7 +149,7 @@ object LocalFinish {
                     outId: String, outCanonical: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val flat = collectPairs(edges, aCol, bCol)
+    val flat = collectLongs(edges, aCol, bCol)
     val idx = new scala.collection.mutable.LongMap[Int]()
     var nNodes = 0
     var i = 0
@@ -268,7 +204,7 @@ object LocalFinish {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var flat = collectPairs(edges, "src", "dst")
+    var flat = collectLongs(edges, "src", "dst")
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
@@ -323,8 +259,8 @@ object LocalFinish {
                      rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val flat = collectPairs(edges, "src", "dst")
-    val seedArr = collectPairs(seeds, "node", "label")
+    val flat = collectLongs(edges, "src", "dst")
+    val seedArr = collectLongs(seeds, "node", "label")
     // Seed node → every distinct seed label it carries (the caller
     // distincts the frame, so lists hold no duplicates).
     val seedLab = new scala.collection.mutable.LongMap[List[Long]]()
@@ -399,13 +335,9 @@ object LocalFinish {
     * L1-normalizes; hub sums round(auth·1e9) longs over out-edges
     * ditto. Contributions depend only on the source node's score, so
     * the per-edge Spark-round collapses to one round per node.
+    * `flat` is the caller's bounded gate collect: the driver path
+    * never builds the distributed substrate.
     */
-  def hitsLocal(edges: DataFrame, iters: Int): DataFrame =
-    hitsLocal(edges.sparkSession, collectPairs(edges, "src", "dst"),
-      iters)
-
-  /** Pre-collected twin (r15): the caller's bounded gate collect IS
-    * the edge materialization — no distributed substrate built. */
   def hitsLocal(spark: SparkSession, flat: Array[Long], iters: Int)
       : DataFrame = {
     import spark.implicits._
@@ -452,14 +384,9 @@ object LocalFinish {
   /** PageRank, exact emulation of [[Graph.pageRank]]: per round each
     * node's contribution round(pr/outdeg·1e12) (one Spark-round per
     * SOURCE node — the per-edge value is per-source constant) sums as
-    * longs per destination; pr' = (1−d)/n + d·(s/1e12).
+    * longs per destination; pr' = (1−d)/n + d·(s/1e12). `flat` is
+    * pre-collected, as for [[hitsLocal]].
     */
-  def pageRankLocal(edges: DataFrame, iters: Int,
-                    damping: Double): DataFrame =
-    pageRankLocal(edges.sparkSession,
-      collectPairs(edges, "src", "dst"), iters, damping)
-
-  /** Pre-collected twin (r15): see [[hitsLocal]]. */
   def pageRankLocal(spark: SparkSession, flat: Array[Long], iters: Int,
                     damping: Double): DataFrame = {
     import spark.implicits._
@@ -505,18 +432,15 @@ object LocalFinish {
   }
 
   /** BOUNDED two-STRING-column collect for the string-keyed PageRank
-    * finish (r17): count-gate + collect (see [[collectPairsBounded]]
-    * for why not limit(cap+1)), then a driver-side dictionary
-    * encoding — first occurrence order, which is arbitrary but
-    * irrelevant because [[pageRankCore]]'s arithmetic never reads key
-    * values. Returns the stride-2 encoded pairs + the id→string table.
+    * finish (r17): the [[collectLongsBounded]] gate, then a
+    * driver-side dictionary encoding — first occurrence order, which
+    * is arbitrary but irrelevant because [[pageRankCore]]'s arithmetic
+    * never reads key values. Returns the stride-2 encoded pairs + the
+    * id→string table.
     */
-  def collectStringPairsBounded(df: DataFrame, a: String, b: String,
-      cap: Long): Option[(Array[Long], Array[String])] = {
-    val proj = df.select(col(a), col(b))
-    if (proj.count() > cap) None
-    else {
-      val rows = proj.collect()
+  def collectStringPairsBounded(df: DataFrame, cap: Long, a: String,
+      b: String): Option[(Array[Long], Array[String])] =
+    collectBounded(df, cap, Seq(a, b)) { rows =>
       val idx = new scala.collection.mutable.AnyRefMap[String, Long]()
       val names = scala.collection.mutable.ArrayBuffer.empty[String]
       def id(s: String): Long = idx.getOrElseUpdate(s,
@@ -528,9 +452,8 @@ object LocalFinish {
         out(2 * i + 1) = id(rows(i).getString(1))
         i += 1
       }
-      Some((out, names.toArray))
+      (out, names.toArray)
     }
-  }
 
   /** String-keyed PageRank finish: [[pageRankCore]] over the encoded
     * pairs, decoded back through the dictionary on output. */
@@ -546,20 +469,9 @@ object LocalFinish {
     * [[Graph.personalizedPageRank]]: init and teleport mass are
     * is_seed/|S| (|S| counts the WHOLE distinct seed frame, including
     * seeds outside the graph, exactly like the distributed ns
-    * broadcast); contribution device as [[pageRankLocal]].
+    * broadcast); contribution device as [[pageRankLocal]]. Both
+    * `flat` and `seedArr` are pre-collected, as for [[hitsLocal]].
     */
-  def pprLocal(edges: DataFrame, seeds: DataFrame, iters: Int,
-               damping: Double): DataFrame =
-    pprLocal(edges, collectCol(seeds, "node"), iters, damping)
-
-  /** Pre-collected-seed twin: the caller's bounded gate collect IS the
-    * seed materialization (see [[collectColBounded]]). */
-  def pprLocal(edges: DataFrame, seedArr: Array[Long], iters: Int,
-               damping: Double): DataFrame =
-    pprLocal(edges.sparkSession, collectPairs(edges, "src", "dst"),
-      seedArr, iters, damping)
-
-  /** Fully pre-collected twin (r15): see [[hitsLocal]]. */
   def pprLocal(spark: SparkSession, flat: Array[Long],
                seedArr: Array[Long], iters: Int,
                damping: Double): DataFrame = {
@@ -598,24 +510,11 @@ object LocalFinish {
     * loop: integer hop distances, frontier-only expansion, newly seen
     * nodes get round k — all set arithmetic, trivially bit-identical.
     * Seeds outside the edge list still appear at dist 0 (the reached
-    * frame starts from the seed set on both paths).
+    * frame starts from the seed set on both paths). Both the edge
+    * array and the seed array come from the caller's bounded gate
+    * collects — the driver path never builds the distributed substrate
+    * (repartition + sort + cache) it would immediately discard.
     */
-  def bfsLocal(edges: DataFrame, seeds: DataFrame,
-               maxHops: Int): DataFrame =
-    bfsLocal(edges,
-      collectCol(seeds.select(col("node")).distinct(), "node"), maxHops)
-
-  /** Pre-collected-seed twin: the caller's bounded gate collect IS the
-    * seed materialization (see [[collectColBounded]]). */
-  def bfsLocal(edges: DataFrame, seedArr: Array[Long],
-               maxHops: Int): DataFrame =
-    bfsLocal(edges.sparkSession, collectPairs(edges, "src", "dst"),
-      seedArr, maxHops)
-
-  /** Fully pre-collected twin (r15): both the edge array and the seed
-    * array come from the caller's bounded gate collects — the driver
-    * path never builds the distributed substrate (repartition + sort
-    * + cache) it would immediately discard. */
   def bfsLocal(spark: SparkSession, flat: Array[Long],
                seedArr: Array[Long], maxHops: Int): DataFrame = {
     import spark.implicits._
@@ -701,7 +600,7 @@ object LocalFinish {
       : Seq[DataFrame] = {
     val spark = sym.sparkSession
     import spark.implicits._
-    val flat = collectPairs(sym, "src", "dst")
+    val flat = collectLongs(sym, "src", "dst")
     val md = java.security.MessageDigest.getInstance("MD5")
     def fp64(s: String): Long = {
       md.reset()
@@ -764,7 +663,7 @@ object LocalFinish {
       : (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var flat = collectPairs(edges, "a", "b")
+    var flat = collectLongs(edges, "a", "b")
 
     // forward adjacency (a → sorted higher neighbors) of the current
     // edge array; support counts in nested primitive maps.
@@ -1032,15 +931,9 @@ object LocalFinish {
     * contribution round(pr·w/wsum·1e12) per EDGE — Spark-rounds are
     * memoized per (source, weight) in nested LongMaps (the boxed-key
     * heap lesson), since a source's contribution is per-weight
-    * constant within a round.
+    * constant within a round. `flat` is pre-collected, as for
+    * [[hitsLocal]], and stride-3 (src, dst, weight).
     */
-  def weightedPageRankLocal(edges: DataFrame, iters: Int,
-                            damping: Double): DataFrame =
-    weightedPageRankLocal(edges.sparkSession,
-      collectTriples(edges, "src", "dst", "weight"), iters, damping)
-
-  /** Pre-collected twin (r15): see [[hitsLocal]]; `flat` is stride-3
-    * (src, dst, weight). */
   def weightedPageRankLocal(spark: SparkSession, flat: Array[Long],
                             iters: Int, damping: Double): DataFrame = {
     import spark.implicits._

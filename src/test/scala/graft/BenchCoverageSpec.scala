@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Freezes the bench-coverage invariant mechanically (VERDICT r8 #6):
   * every oracled catalog query must either be benched directly
   * ([[Bench.headline]]) or name a benched representative of its
-  * operator family ([[Bench.familyRep]]). Before this spec the
-  * invariant was re-verified by hand each round; a new query landing
-  * without a bench mapping now fails CI instead of surfacing as a
-  * judge finding (VERDICT r7 #2 was exactly that gap).
+  * operator family ([[Bench.familyRep]]). The headline is derived as
+  * catalog keys minus familyRep keys, so what can still go wrong is
+  * in [[Bench.familyRep]]: a representative that is itself a mapped
+  * variant (so never benched), or a key naming no catalog query.
   */
 class BenchCoverageSpec extends AnyFunSuite {
 
@@ -25,20 +25,9 @@ class BenchCoverageSpec extends AnyFunSuite {
       s"familyRep points at unbenched representatives: ${bad.toSeq.sorted.mkString(", ")}")
   }
 
-  test("headline names only real catalog queries (no stale entries)") {
-    val stale = Bench.headline.toSet.diff(SparkEntry.queries.keySet)
+  test("every familyRep key is a real catalog query") {
+    val stale = Bench.familyRep.keySet.diff(SparkEntry.queries.keySet)
     assert(stale.isEmpty,
-      s"headline entries with no catalog query: ${stale.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("familyRep keys are not double-booked in the headline") {
-    val both = Bench.familyRep.keySet.intersect(Bench.headline.toSet)
-    assert(both.isEmpty,
-      s"queries both benched and mapped to a representative: ${both.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("headline has no duplicates") {
-    val dups = Bench.headline.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicate headline entries: ${dups.mkString(", ")}")
+      s"familyRep keys with no catalog query: ${stale.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -66,18 +66,30 @@ for f in bench_out.json bench_min.json BENCH_SUMMARY.json; do
 done
 echo "bench.sh: maps archived as bench_runs/bench_{out,min}.$ts.$head.json (promote with git add/commit)"
 
-# 4. Cache-hygiene gate (VERDICT r16 #2): Bench sweeps resident RDDs
-#    between queries and records any query whose residue is not in
-#    CacheHygiene.expectedResidue. A leak means a release() call-site
-#    rule was broken — fail AFTER archiving so the run is never lost.
-leaks=$(python3 -c "
+# 4. Cache-hygiene and failure gates (VERDICT r16 #2): Bench sweeps
+#    resident RDDs between queries and records any query whose residue
+#    is not in CacheHygiene.expectedResidue (a broken release() call
+#    site), and names every query that threw (timed as -1 and left out
+#    of the total, so a failure would otherwise read as a faster run).
+#    Both fail AFTER archiving so the run is never lost.
+gate() {
+  python3 -c "
 import json,sys
 try: d=json.load(open('BENCH_SUMMARY.json'))
 except Exception: sys.exit(0)
-ls=d.get('cache_leaks',[])
-print(' '.join(ls))")
+print(' '.join(d.get('$1',[])))"
+}
+status=0
+leaks=$(gate cache_leaks)
 if [ -n "$leaks" ]; then
   echo "bench.sh: CACHE-HYGIENE LEAK in: $leaks" >&2
   echo "(unexpected resident RDDs after these queries — see stderr LEAK lines; fix the release site or document in CacheHygiene.expectedResidue)" >&2
-  exit 1
+  status=1
 fi
+failed=$(gate failed)
+if [ -n "$failed" ]; then
+  echo "bench.sh: FAILED queries: $failed" >&2
+  echo "(these queries threw — see stderr [bench] FAILED lines)" >&2
+  status=1
+fi
+exit $status
