@@ -2,6 +2,9 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -22,10 +25,26 @@ import graft.query.{CustomerContact, Lookups, MonthlySummary, PastDue}
   * due_date, bill_total, applied, status, currency (+ optionally
   * customer_terms, terms_days, customer_po_number, row_id→id).
   * `customers`: id, name (+ contact columns for the contact endpoints).
+  *
+  * Requests are handled in parallel on a fixed pool of daemon threads, as
+  * many as the frames' session has default-parallelism slots, so at most
+  * that many requests run Spark jobs at once. Handlers never cache or
+  * unpersist the frames they are given.
   */
 class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = ArServer.create(port)
+
+  private val handlers: ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(
+      invoices.sparkSession.sparkContext.defaultParallelism, (r: Runnable) => {
+        val t = new Thread(r, s"ar-server-handler-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(handlers)
 
   // ---------------------------------------------------------------- JSON
 
@@ -116,8 +135,9 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
     server.createContext(path, (ex: HttpExchange) =>
       try f(ex)
       catch {
-        case e: Throwable =>
-          respond(ex, 500, jobj(Seq("detail" -> e.getMessage)))
+        case NonFatal(e) =>
+          respond(ex, 500, jobj(Seq("detail" ->
+            Option(e.getMessage).getOrElse(e.getClass.getName))))
       })
 
   // -------------------------------------------------------------- endpoints
@@ -198,16 +218,15 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
           .collect().head.getLong(0)
         if (n == 0) notFound(ex, "Customer")
         else {
-          val page = CustomerContact.contacts(customers, invoices, name,
+          val rows = CustomerContact.contacts(customers, invoices, name,
             dimCols = Seq("contact_name", "contact_phone", "contact_email"),
-            limit = limit, offset = offset)
-          val (rows, total) = CustomerContact.contactsEnvelope(page)
-          val contacts = rows.collect().map(rowObj(_,
+            limit = limit, offset = offset).collect()
+          val contacts = rows.map(rowObj(_,
             Seq("contact_name", "contact_email", "contact_phone",
               "last_seen_invoice_date")))
           // quirk preserved: total = page length (`customers.py:118`)
           respond(ex, 200,
-            s"""{"customer_name": ${jstr(name)}, "contacts": [${contacts.mkString(", ")}], "total": $total}""")
+            s"""{"customer_name": ${jstr(name)}, "contacts": [${contacts.mkString(", ")}], "total": ${rows.length}}""")
         }
     }
   }
@@ -233,5 +252,19 @@ class ArServer(invoices: DataFrame, customers: DataFrame, port: Int = 0) {
   /** Start; returns the bound port (pass 0 for ephemeral). */
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop accepting requests, then let the handler pool wind down. */
+  def stop(): Unit = { server.stop(0); handlers.shutdown() }
+}
+
+object ArServer {
+
+  // The JDK server writes a response's headers and body as two segments.
+  // With Nagle's algorithm on, the body waits for the client's delayed ACK
+  // of the headers, which adds ≈ 40 ms to every response. The JDK reads
+  // this property once, when its server configuration class loads, so it
+  // is set here, before the first `HttpServer.create`.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def create(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 }

@@ -80,20 +80,19 @@ object PastDue {
     invoices.filter(rawOutstanding > lit(BigDecimal(0)) && col("due_date") < asOf)
       .count()
 
-  /** The reference's full page envelope (`{items, total}`) served the
-    * scale-right way: the applied-payments aggregation — the dominant cost
-    * (full lineitem scan + shuffle) — is computed ONCE and shared by the
-    * page and the count via a cache, instead of replanning it per action.
+  /** The reference's full page envelope (`{items, total}`): the page
+    * collect and the `total` count, run as two queries over the frames
+    * passed in, as the reference runs them (SURVEY.md §3.1, steps 6–7).
+    * Nothing is cached here: Spark keys a cache by plan, so a per-call
+    * `unpersist` would also drop a cache the caller, or a concurrent call,
+    * holds on the same frame.
     */
   case class PageResult(items: Array[org.apache.spark.sql.Row], total: Long)
 
   def servePage(invoices: DataFrame, customers: DataFrame, asOf: Column,
                 limit: Int, offset: Int,
-                descending: Boolean = false): PageResult = {
-    val inv = invoices.cache()
-    try PageResult(
-      page(report(inv, customers, asOf, descending), limit, offset).collect(),
-      total(inv, asOf))
-    finally inv.unpersist()
-  }
+                descending: Boolean = false): PageResult =
+    PageResult(
+      page(report(invoices, customers, asOf, descending), limit, offset).collect(),
+      total(invoices, asOf))
 }

@@ -13,7 +13,7 @@ import graft.sources.CsvSource
 class ArServerSpec extends SparkSpec {
 
   private lazy val parsed = Parse.parsed(
-    CsvSource.read(spark, "/root/reference/data/unicorn_inc.csv")).cache()
+    CsvSource.read(spark, ReferenceFixture.csv)).cache()
   private lazy val dim = Normalize.dimension(parsed).cache()
   private lazy val invoices = Normalize.fkResolve(parsed, dim).cache()
   private lazy val customers = dim.select(col("customer_id").as("id"),

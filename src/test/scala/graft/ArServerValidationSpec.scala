@@ -2,14 +2,16 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.scalatest.BeforeAndAfterAll
 import graft.api.ArServer
 
 /** Query-parameter validation of the REST façade: `limit`/`offset` that
   * are not integers or fall out of range answer 422 with a
-  * `{"detail": ...}` body, as FastAPI does, never a 500. Runs over small
-  * in-memory frames, so it needs no ingested fixture.
+  * `{"detail": ...}` body, as FastAPI does, never a 500; a handler that
+  * does fail answers 500 with a string `detail`. Runs over small in-memory
+  * frames, so it needs no ingested fixture.
   */
-class ArServerValidationSpec extends SparkSpec {
+class ArServerValidationSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val (server, port) = {
     import spark.implicits._
@@ -32,6 +34,8 @@ class ArServerValidationSpec extends SparkSpec {
     val s = new ArServer(invoices, customers)
     (s, s.start())
   }
+
+  override def afterAll(): Unit = server.stop()
 
   private val client = HttpClient.newHttpClient()
 
@@ -96,6 +100,18 @@ class ArServerValidationSpec extends SparkSpec {
       eBody)
     assert(get("/customers/contact?limit=5")._1 == 400)
     assert(get("/customers/contact?name=Nobody")._1 == 404)
-    server.stop()
+  }
+
+  test("a handler that throws answers 500 with a string detail") {
+    // no `name` column, so the list query fails in analysis
+    val broken = new ArServer(spark.range(1).toDF("id"), spark.range(1).toDF("id"))
+    val p = broken.start()
+    try {
+      val resp = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$p/customers/")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 500, resp.body())
+      assert(resp.body().matches("""\{"detail": ".+"\}"""), resp.body())
+    } finally broken.stop()
   }
 }

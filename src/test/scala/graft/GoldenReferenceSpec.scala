@@ -14,10 +14,8 @@ import graft.query.{CustomerContact, MonthlySummary, PastDue}
   */
 class GoldenReferenceSpec extends SparkSpec {
 
-  private val csvPath = "/root/reference/data/unicorn_inc.csv"
-
   private lazy val raw: DataFrame = {
-    val df = graft.sources.CsvSource.read(spark, csvPath)
+    val df = graft.sources.CsvSource.read(spark, ReferenceFixture.csv)
     // single small file → one partition; monotonic id = file order
     assert(df.rdd.getNumPartitions == 1)
     df.cache()
@@ -87,7 +85,7 @@ class GoldenReferenceSpec extends SparkSpec {
     assert(total == 1)
   }
 
-  test("servePage envelope: items + total share one applied computation") {
+  test("servePage envelope: page items plus the pre-paging total") {
     val env = PastDue.servePage(withFk, customers,
       lit("2025-03-01").cast("date"), limit = 5, offset = 0)
     assert(env.items.length == 5)

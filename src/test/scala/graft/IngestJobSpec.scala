@@ -8,7 +8,7 @@ class IngestJobSpec extends SparkSpec {
 
   test("full job reproduces the reference's ingest stats and is idempotent") {
     val out = Files.createTempDirectory("graft-ingest").toString
-    val csv = "/root/reference/data/unicorn_inc.csv"
+    val csv = ReferenceFixture.csv
 
     val stats = IngestJob.run(spark, csv, out)
     assert(stats.rows == 3107)

@@ -7,7 +7,7 @@ import graft.sources.{ArSchemas, CsvSource}
 class SourcesSpec extends SparkSpec {
 
   test("S1: schema'd CSV read, header contract, no corrupt lines in ref data") {
-    val raw = CsvSource.read(spark, "/root/reference/data/unicorn_inc.csv")
+    val raw = CsvSource.read(spark, ReferenceFixture.csv)
       .cache()
     assert(raw.columns.toSeq ==
       CsvSource.Columns ++ Seq("_corrupt_record", "row_id"))
