@@ -232,8 +232,7 @@ object AnalyticsCatalog {
     // every iteration of the trainer inside the differential.
     "q_pagerank" -> ((s, d) =>
       graft.operators.Graph.pageRank(graft.operators.Graph.purchaseEdges(
-        Tables.orders(s, d), Tables.lineitem(s, d)),
-        edgesDistinct = true)),
+        Tables.orders(s, d), Tables.lineitem(s, d)))),
 
     // TextRank corpus keywords: PageRank over the word-adjacency
     // graph (window 2), rounded-rank top-20 with token tie-break.
@@ -263,8 +262,7 @@ object AnalyticsCatalog {
         graft.operators.Graph.purchaseEdges(
           Tables.orders(s, d), Tables.lineitem(s, d)),
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
-          .select((col("s_suppkey") * 2L + 1L).as("node")),
-        edgesDistinct = true)),
+          .select((col("s_suppkey") * 2L + 1L).as("node")))),
 
     // Multi-source BFS from the same supplier seed slice: exact
     // integer hop distance to everything within 4 hops of the slice —
@@ -277,8 +275,7 @@ object AnalyticsCatalog {
         graft.operators.Graph.purchaseEdges(
           Tables.orders(s, d), Tables.lineitem(s, d)),
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
-          .select((col("s_suppkey") * 2L + 1L).as("node")),
-        edgesDistinct = true)),
+          .select((col("s_suppkey") * 2L + 1L).as("node")))),
 
     // Two-sweep diameter lower bound on the same purchase graph:
     // BFS, restart from the farthest node, report its eccentricity.
@@ -287,8 +284,7 @@ object AnalyticsCatalog {
         graft.operators.Graph.purchaseEdges(
           Tables.orders(s, d), Tables.lineitem(s, d)),
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
-          .select((col("s_suppkey") * 2L + 1L).as("node")),
-        edgesDistinct = true)),
+          .select((col("s_suppkey") * 2L + 1L).as("node")))),
 
     // HITS hubs & authorities over the DIRECTED customer→supplier
     // purchase graph: authorities rank suppliers by how strongly
@@ -300,8 +296,7 @@ object AnalyticsCatalog {
     "q_hits" -> ((s, d) =>
       graft.operators.Graph.hits(
         graft.operators.Graph.directedPurchaseEdges(
-          Tables.orders(s, d), Tables.lineitem(s, d)),
-        edgesDistinct = true)),
+          Tables.orders(s, d), Tables.lineitem(s, d)))),
 
     // Seeded label propagation: every 5th supplier seeds its nation
     // as a label (the q_ppr seed slice), 3 synchronous majority
@@ -315,8 +310,7 @@ object AnalyticsCatalog {
           Tables.orders(s, d), Tables.lineitem(s, d)),
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
           .select((col("s_suppkey") * 2L + 1L).as("node"),
-            col("s_nationkey").cast("long").as("label")),
-        edgesDistinct = true)),
+            col("s_nationkey").cast("long").as("label")))),
 
     // Newman modularity of the label-propagation partition on the
     // purchase graph: per-community degree sums / within-edge counts
@@ -327,16 +321,15 @@ object AnalyticsCatalog {
     "q_modularity" -> ((s, d) => {
       // Eager checkpoint: the purchase-edge chain feeds BOTH the LP
       // partition and the community stats — uncheckpointed it ran
-      // twice (r14 substrate audit, PLANS.md).
+      // twice (r14 substrate audit, PLANS.md). purchaseEdges is an
+      // edge set, as both operators require, so neither re-distincts.
       val edges = graft.operators.Graph.purchaseEdges(
         Tables.orders(s, d), Tables.lineitem(s, d)).localCheckpoint()
       val lp = graft.operators.Graph.labelPropagation(edges,
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
           .select((col("s_suppkey") * 2L + 1L).as("node"),
-            col("s_nationkey").cast("long").as("label")),
-        edgesDistinct = true)
-      val out = graft.operators.Graph.modularity(edges, lp,
-        edgesDistinct = true)
+            col("s_nationkey").cast("long").as("label")))
+      val out = graft.operators.Graph.modularity(edges, lp)
       // modularity() checkpointed its per-community stats EAGERLY, so
       // both substrate frames are dead already (r17 cache-hygiene).
       graft.operators.LocalFinish.release(edges)
@@ -565,8 +558,7 @@ object AnalyticsCatalog {
     "q_mst" -> ((s, d) =>
       graft.operators.Graph.boruvkaTrace(
         graft.operators.Graph.supplierAffinityEdges(
-          Tables.lineitem(s, d)),
-        edgesCanonical = true)),
+          Tables.lineitem(s, d)))),
 
     // t-closeness audit over the l-diversity QI groups and bands:
     // exact cumulative-difference EMD to the global distribution,
@@ -617,16 +609,15 @@ object AnalyticsCatalog {
     // boundary-quality companion to q_modularity (cut / min-side
     // volume, exact integers, one division).
     "q_conductance" -> ((s, d) => {
-      // Shared-substrate checkpoint — see q_modularity.
+      // Shared-substrate checkpoint of the purchase edge set — see
+      // q_modularity.
       val edges = graft.operators.Graph.purchaseEdges(
         Tables.orders(s, d), Tables.lineitem(s, d)).localCheckpoint()
       val lp = graft.operators.Graph.labelPropagation(edges,
         Tables.supplier(s, d).filter(col("s_suppkey") % 5 === 0)
           .select((col("s_suppkey") * 2L + 1L).as("node"),
-            col("s_nationkey").cast("long").as("label")),
-        edgesDistinct = true)
-      val out = graft.operators.Graph.conductance(edges, lp,
-        edgesDistinct = true)
+            col("s_nationkey").cast("long").as("label")))
+      val out = graft.operators.Graph.conductance(edges, lp)
       // conductance() checkpointed its per-community stats EAGERLY, so
       // both substrate frames are dead already (r17 cache-hygiene).
       graft.operators.LocalFinish.release(edges)
@@ -641,8 +632,7 @@ object AnalyticsCatalog {
     "q_edge_cut" -> ((s, d) =>
       graft.operators.Graph.hashShardCut(
         graft.operators.Graph.purchaseEdges(
-          Tables.orders(s, d), Tables.lineitem(s, d)),
-        edgesDistinct = true)),
+          Tables.orders(s, d), Tables.lineitem(s, d)))),
 
     // Exact distinct suppliers per returnflag via dense-bitmap
     // aggregation: the shuffle carries one |dict|/8-byte bitmap per
@@ -745,8 +735,7 @@ object AnalyticsCatalog {
     "q_triangles" -> ((s, d) =>
       graft.operators.Graph.triangles(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // 1-WL color refinement on the same co-order part graph: degree
     // colors hashed with sorted neighbor multisets, 2 rounds — the
@@ -754,16 +743,14 @@ object AnalyticsCatalog {
     "q_wl_colors" -> ((s, d) =>
       graft.operators.Graph.wlColors(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // WL structural-equivalence classes: top final-color groups with
     // the min-node keeper — the subgraph-dedup readout.
     "q_wl_classes" -> ((s, d) =>
       graft.operators.Graph.wlClasses(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // Adamic-Adar link prediction on the same co-order part graph:
     // top non-adjacent pairs by Σ 1/ln(deg) over common neighbors —
@@ -772,22 +759,23 @@ object AnalyticsCatalog {
     "q_link_predict" -> ((s, d) =>
       graft.operators.Graph.adamicAdar(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // 3-core of the same co-order part graph by convergence-probed
     // peeling (edge-count fixpoint probe, 12-round cap — result
     // bit-identical to fixed-12, r9 measurement in PLANS.md): the
     // graph-cleaning cut that drops the sparse fringe before the
     // expensive passes. Per round one degree aggregate + two
-    // left-semi joins, localCheckpoint lineage truncation.
+    // left-semi joins, localCheckpoint lineage truncation. The
+    // symmetrized pairs stay an edge set: src < dst in one branch,
+    // src > dst in the other.
     "q_kcore" -> ((s, d) => {
       val p = graft.operators.Itemsets.pairEdges(
         Tables.lineitem(s, d), "l_orderkey", "l_partkey")
       graft.operators.Graph.kCore(
         p.select(col("a").as("src"), col("b").as("dst"))
           .unionByName(p.select(col("b").as("src"), col("a").as("dst"))),
-        3, edgesDistinct = true)
+        3)
     }),
 
     // 3-truss of the same co-order part graph: edge-level peel by
@@ -799,7 +787,7 @@ object AnalyticsCatalog {
       graft.operators.Graph.kTruss(
         graft.operators.Itemsets.pairEdges(
           Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        k = 3, edgesDistinct = true)),
+        k = 3)),
 
     // Welch's t between two customer segments on account balance —
     // one conditional-aggregate pass, closed form in doubles.
@@ -889,8 +877,7 @@ object AnalyticsCatalog {
     "q_clustering_coeff" -> ((s, d) =>
       graft.operators.Graph.clusteringCoefficient(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // Degree assortativity (Newman's r) of the same graph: Pearson
     // correlation of endpoint degrees over every edge end — one
@@ -899,8 +886,7 @@ object AnalyticsCatalog {
     "q_assortativity" -> ((s, d) =>
       graft.operators.Graph.assortativity(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // Winsorized price statistics per return flag: clip at the exact
     // p05/p95 order statistics (integer-index selection — no
@@ -916,16 +902,14 @@ object AnalyticsCatalog {
     "q_degree_gini" -> ((s, d) =>
       graft.operators.Graph.degreeGini(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // Hub edge share of the same graph: fraction of edges touching
     // the top-100 degree nodes — how much join work lands on hubs.
     "q_hub_share" -> ((s, d) =>
       graft.operators.Graph.hubShare(
         graft.operators.Itemsets.pairEdges(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey"),
-        edgesDistinct = true)),
+          Tables.lineitem(s, d), "l_orderkey", "l_partkey"))),
 
     // Join-strategy advisor for lineitem⋈part on partkey: the degree
     // statistics folded into the broadcast/salt/shuffle decision —

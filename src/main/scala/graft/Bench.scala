@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.util.control.NonFatal
 
 /** Driver-run benchmark: one JSON line of steady-state per-query seconds.
@@ -146,15 +144,7 @@ object Bench {
     // Optional args: builder-local subset runs (driver passes none).
     val subset = if (args.isEmpty) headline else headline.filter(args.toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     // The only global windows in the catalog are the audited allowlist
     // (PlanAuditSpec.globalWindowAllowed: dimension surrogate key over

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev utility: print the formatted physical plan of catalog queries.
   * Usage: runMain graft.Explain <sfDir> [queryName ...] (default: all).
@@ -22,20 +23,13 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try substrates.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
         .explain("formatted")
-      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -17,6 +17,22 @@ object SparkEntry {
   /** Fixed as-of date for the past-due report (orders span 1995‥2001). */
   val AsOf = "1998-06-01"
 
+  /** The local session the CLI mains (Bench, Verify, StageProbe,
+    * Explain) run on: `local[cpus]` with as many shuffle partitions,
+    * UTC session time, parquet nanos read as longs, and the graft
+    * extensions; no UI. `cpus` defaults to `SPARK_GRAFT_CPUS` (32).
+    */
+  def localSession(cpus: String =
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_past_due")(spark, "/root/testdata/sf0.001")

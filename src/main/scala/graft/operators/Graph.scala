@@ -35,6 +35,16 @@ import org.apache.spark.sql.functions._
   * under the same key), one integer-keyed aggregate, one left join
   * back to the node frame. Nodes/edges/out-degrees are computed once
   * and cached; the N-row count is a 1-row broadcast.
+  *
+  * Edge-set precondition, shared by every operator here: an edge frame
+  * is a SET of rows — each operator uses its (src, dst) or (a, b)
+  * projection as given, with no defensive `distinct()`. The catalog's
+  * builders ([[purchaseEdges]], [[directedPurchaseEdges]],
+  * [[graft.operators.Itemsets.pairEdges]] and its symmetrization) are
+  * sets by construction. [[boruvkaTrace]] additionally takes CANONICAL
+  * edges: `src < dst`, no self-loops, one `w` per pair (as
+  * [[supplierAffinityEdges]] builds them). A caller holding arbitrary
+  * rows calls `.distinct()` (or canonicalizes) itself.
   */
 object Graph {
 
@@ -55,16 +65,8 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
                damping: Double = 0.85,
-               localEdgeCap: Long = 2000000L,
-               edgesDistinct: Boolean = false): DataFrame = {
-    // `edgesDistinct = true` skips the defensive dedup — callers may
-    // set it ONLY when the edge frame is distinct by construction
-    // (e.g. [[purchaseEdges]]: per-direction distinct over disjoint
-    // even/odd endpoint key spaces). r17, guide §2.4: the distinct on
-    // already-unique data was one full edge shuffle per query, ~0.5 s
-    // at sf0.1 and an entire pass over the edge list at corpus scale.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val e0 = if (edgesDistinct) sel0 else sel0.distinct()
+               localEdgeCap: Long = 2000000L): DataFrame = {
+    val e0 = edges.select(col("src"), col("dst"))
     // HYBRID FINISH (r14, VERDICT r13 #1 — see [[hits]]): the 1e-12
     // long contribution sums make each round exact, so the driver
     // replay is bit-identical. r15 restructure (VERDICT r14 #3): ONE
@@ -181,12 +183,8 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 5,
                            damping: Double = 0.85,
-                           localEdgeCap: Long = 2000000L,
-                           edgesDistinct: Boolean = false): DataFrame = {
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val e0 = if (edgesDistinct) sel0 else sel0.distinct()
+                           localEdgeCap: Long = 2000000L): DataFrame = {
+    val e0 = edges.select(col("src"), col("dst"))
     val sd = seeds.select(col("node")).distinct()
     // HYBRID FINISH (r14, VERDICT r13 #1 — see [[hits]]): exact
     // replay incl. the whole-seed-frame |S| (seeds outside the graph
@@ -356,7 +354,10 @@ object Graph {
 
   /** Symmetrized bipartite purchase graph: customer c ↔ supplier s for
     * every distinct (o_custkey, l_suppkey) pair — node ids namespaced
-    * as 2·custkey / 2·suppkey+1.
+    * as 2·custkey / 2·suppkey+1. An edge set: each direction's pairs
+    * are distinct, and the two directions cannot share a row (a
+    * customer→supplier edge starts at an even id, its reverse at an
+    * odd one).
     */
   def purchaseEdges(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
@@ -409,8 +410,7 @@ object Graph {
     * the triangles themselves. Top-`k` via TakeOrderedAndProject for
     * a deterministic bounded result.
     */
-  def triangles(edges: DataFrame, k: Int = 100,
-                edgesDistinct: Boolean = false): DataFrame = {
+  def triangles(edges: DataFrame, k: Int = 100): DataFrame = {
     // The upstream edge derivation (e.g. the pairEdges prune chain —
     // two joins + two aggregates) feeds THREE join legs; uncached it
     // re-runs per leg (the r2 shingle-index lesson, PLANS.md). EAGER
@@ -421,10 +421,7 @@ object Graph {
     // when the frame goes out of scope, the duplicateClusters
     // discipline). The swap cut the one-shot consumers ~2× at sf0.1
     // (gini 3.9→1.4 s, assortativity 2.2→1.3 s probe, PLANS.md).
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only (Itemsets.pairEdges ends in a pair aggregate).
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("ta"), col("e1.b").as("tb"),
@@ -458,8 +455,7 @@ object Graph {
     * support measured ON the surviving subgraph.
     */
   def kTruss(edges: DataFrame, k: Int = 4, rounds: Int = 5,
-             localEdgeCap: Long = 2000000L,
-             edgesDistinct: Boolean = false): DataFrame = {
+             localEdgeCap: Long = 2000000L): DataFrame = {
     // supports() enumerates only edges in ≥1 triangle, so triangle-free
     // edges vanish from the join regardless of the threshold — the peel
     // is only the k-truss for k ≥ 3 (where such edges are rightly cut).
@@ -479,11 +475,7 @@ object Graph {
         .unionByName(t.select(col("ta").as("a"), col("tc").as("b")))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("a"), col("b"))
-    var e = (if (edgesDistinct) sel0 else sel0.distinct())
-      .localCheckpoint()
+    var e = edges.select(col("a"), col("b")).localCheckpoint()
     var n = e.count()
     var r = 0
     var converged = false
@@ -550,12 +542,8 @@ object Graph {
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame,
               maxHops: Int = 4,
-              localEdgeCap: Long = 2000000L,
-              edgesDistinct: Boolean = false): DataFrame = {
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val ed0 = if (edgesDistinct) sel0 else sel0.distinct()
+              localEdgeCap: Long = 2000000L): DataFrame = {
+    val ed0 = edges.select(col("src"), col("dst"))
     val sd = seeds.select(col("node")).distinct()
     // HYBRID FINISH (r14/r15 — see [[hits]]): hop distances are exact
     // integers and the frontier loop never needs more than set
@@ -574,11 +562,11 @@ object Graph {
       releaseOnDriverFinish = true)
   }
 
-  /** [[bfsHops]] on a PREPARED input: `ed` is already the distinct
-    * (src, dst) projection (checkpointed when `eligible`), `sd` the
+  /** [[bfsHops]] on a PREPARED input: `ed` is the (src, dst)
+    * projection of an edge set (checkpointed when `eligible`), `sd` the
     * distinct seed frame. Lets [[diameterTwoSweep]]'s over-cap path
     * run both sweeps on ONE materialization without each sweep
-    * re-distincting and re-checkpointing the blocks.
+    * re-projecting and re-checkpointing the blocks.
     * `releaseOnDriverFinish` must be true ONLY when the caller never
     * reads `ed` again after a driver finish: [[bfsHops]] owns its
     * frame (true); [[diameterTwoSweep]] reuses `ed` across two sweeps
@@ -640,22 +628,14 @@ object Graph {
     */
   def diameterTwoSweep(edges: DataFrame, seeds: DataFrame,
                        maxHops: Int = 6,
-                       localEdgeCap: Long = 2000000L,
-                       edgesDistinct: Boolean = false): DataFrame = {
+                       localEdgeCap: Long = 2000000L): DataFrame = {
     // r15 (VERDICT r14 #3): under the cap, BOTH sweeps replay on ONE
     // bounded edge collect — the whole query is two gate jobs (edges +
     // seeds) plus the driver loop. Over the cap, BOTH sweeps consume
-    // the same checkpointed distinct pair frame, so the caller's edge
+    // the same checkpointed pair frame, so the caller's edge
     // substrate (at sf1: the orders⋈lineitem symmetrize join) executes
-    // exactly once; each sweep's bfsHops then re-distincts only
-    // block-resident pairs. (This supersedes the r14 probe note about
-    // sharing a checkpoint between sweeps measuring slower — that
-    // probe checkpointed the RAW pre-distinct frame on the under-cap
-    // path, which no longer reaches the composition at all.)
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val ed0 = if (edgesDistinct) sel0 else sel0.distinct()
+    // exactly once.
+    val ed0 = edges.select(col("src"), col("dst"))
     val sd = seeds.select(col("node")).distinct()
     val eligible = localEdgeCap > 0 &&
       LocalFinish.allLong(ed0, "src", "dst") &&
@@ -724,13 +704,9 @@ object Graph {
     * about NESTED plan growth does not apply.
     */
   def hits(edges: DataFrame, iters: Int = 5,
-           localEdgeCap: Long = 2000000L,
-           edgesDistinct: Boolean = false): DataFrame = {
+           localEdgeCap: Long = 2000000L): DataFrame = {
     val HScale = 1e9
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only ([[directedPurchaseEdges]] ends in distinct()).
-    val sel0 = edges.select(col("src"), col("dst"))
-    val e0 = if (edgesDistinct) sel0 else sel0.distinct()
+    val e0 = edges.select(col("src"), col("dst"))
     // HYBRID FINISH (r14, VERDICT r13 #1): the fixed-point device
     // makes every half-step exact (long contribution sums, one
     // long/long division), so LocalFinish.hitsLocal replays the loop
@@ -811,7 +787,7 @@ object Graph {
     * per distinct trading pair, nodes namespaced as in
     * [[purchaseEdges]]) — the directed substrate [[hits]] needs:
     * customers are the only sources (hubs), suppliers the only sinks
-    * (authorities).
+    * (authorities). An edge set (it ends in `distinct()`).
     */
   def directedPurchaseEdges(orders: DataFrame,
                             lineitem: DataFrame): DataFrame =
@@ -847,8 +823,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
                        rounds: Int = 3,
-                       localEdgeCap: Long = 2000000L,
-                       edgesDistinct: Boolean = false): DataFrame = {
+                       localEdgeCap: Long = 2000000L): DataFrame = {
     // HYBRID FINISH (r13, the boruvkaTrace template): each round is
     // ~4 keyed shuffles over the FULL edge frame (this loop never
     // contracts), so when the frame fits under the cap the whole
@@ -868,10 +843,7 @@ object Graph {
     // and spreads all of them, identically on both paths.
     val sd = seeds.select(col("node"), col("label")).distinct()
       .localCheckpoint()
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val e0 = if (edgesDistinct) sel0 else sel0.distinct()
+    val e0 = edges.select(col("src"), col("dst"))
     val eligible = localEdgeCap > 0 &&
       LocalFinish.allLong(e0, "src", "dst") &&
       LocalFinish.allLong(sd, "node", "label")
@@ -947,13 +919,8 @@ object Graph {
     * the surviving subgraph.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 12,
-            localEdgeCap: Long = 2000000L,
-            edgesDistinct: Boolean = false): DataFrame = {
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    var e = (if (edgesDistinct) sel0 else sel0.distinct())
-      .localCheckpoint()
+            localEdgeCap: Long = 2000000L): DataFrame = {
+    var e = edges.select(col("src"), col("dst")).localCheckpoint()
     var n = e.count()
     // HYBRID FINISH (r13, the boruvkaTrace template): peeling only
     // deletes rows, so the edge frame contracts monotonically and the
@@ -1017,13 +984,11 @@ object Graph {
     * equi-join — all keyed shuffles, integer-exact until the one final
     * division. Input: ordered edges (a < b), deduplicated upstream.
     */
-  def clusteringCoefficient(edges: DataFrame,
-                            edgesDistinct: Boolean = false): DataFrame = {
+  def clusteringCoefficient(edges: DataFrame): DataFrame = {
     // Five consumers of the edge frame (three enumeration legs + two
     // degree-union scans) — eager localCheckpoint, or pay the
     // pairEdges chain 5× (see [[triangles]]' scaffolding note).
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val t = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("ta"), col("e1.b").as("tb"),
@@ -1069,12 +1034,10 @@ object Graph {
     * 1-row aggregate with map-side partials. Input: ordered edges
     * (a < b), deduplicated upstream.
     */
-  def assortativity(edges: DataFrame,
-                    edgesDistinct: Boolean = false): DataFrame = {
+  def assortativity(edges: DataFrame): DataFrame = {
     // Three consumers (two degree-union scans + the edge join leg) —
     // eager localCheckpoint (see [[triangles]]' scaffolding note).
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -1102,12 +1065,10 @@ object Graph {
     * cheapest pre-flight for "will degree-aware tricks matter here"
     * (the continuous companion to [[degreeProfile]]'s histogram).
     */
-  def degreeGini(edges: DataFrame,
-                 edgesDistinct: Boolean = false): DataFrame = {
+  def degreeGini(edges: DataFrame): DataFrame = {
     // Two degree-union scans of the (possibly expensive) edge chain —
     // eager localCheckpoint (see [[triangles]]' scaffolding note).
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("v"))
@@ -1124,12 +1085,10 @@ object Graph {
     * broadcast back as two membership flags; integer counts, one
     * division.
     */
-  def hubShare(edges: DataFrame, k: Int = 100,
-               edgesDistinct: Boolean = false): DataFrame = {
+  def hubShare(edges: DataFrame, k: Int = 100): DataFrame = {
     // Three consumers (two degree-union scans + the flag join) —
     // eager localCheckpoint (see [[triangles]]' scaffolding note).
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -1190,10 +1149,8 @@ object Graph {
     * singletons via the same offset convention.
     */
   def conductance(edges: DataFrame, communities: DataFrame,
-                  singletonOffset: Long = 1000000L,
-                  edgesDistinct: Boolean = false): DataFrame = {
-    val per = communityEdgeStats(edges, communities, singletonOffset,
-      edgesDistinct)
+                  singletonOffset: Long = 1000000L): DataFrame = {
+    val per = communityEdgeStats(edges, communities, singletonOffset)
     val tot = per.agg(sum(col("degree_sum")).as("t"))
     per.crossJoin(broadcast(tot))
       .select(col("community"), col("degree_sum").as("volume"),
@@ -1208,12 +1165,8 @@ object Graph {
     * label joins, localCheckpoint'd for its multiple consumers.
     */
   private def communityEdgeStats(edges: DataFrame,
-      communities: DataFrame, singletonOffset: Long,
-      edgesDistinct: Boolean): DataFrame = {
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val e = if (edgesDistinct) sel0 else sel0.distinct()
+      communities: DataFrame, singletonOffset: Long): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
     val lab = communities.select(col("node"), col("label"))
     e.join(lab.select(col("node").as("src"), col("label").as("lsrc")),
         Seq("src"), "left")
@@ -1240,15 +1193,11 @@ object Graph {
     * layout ([[conductance]] over [[labelPropagation]] labels gives
     * the achievable contrast). One projection + one aggregate.
     */
-  def hashShardCut(edges: DataFrame, shards: Int = 16,
-                   edgesDistinct: Boolean = false): DataFrame = {
+  def hashShardCut(edges: DataFrame, shards: Int = 16): DataFrame = {
     def shardOf(c: org.apache.spark.sql.Column) =
       conv(substring(md5(concat(c.cast("string"), lit(":shard"))),
         1, 15), 16, 10).cast("long") % shards
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("src"), col("dst"))
-    val ed = if (edgesDistinct) sel0 else sel0.distinct()
+    val ed = edges.select(col("src"), col("dst"))
     // Hash per NODE and join back: |V| md5s instead of 2|E| (measured
     // 15.8 -> 3.3 s min at sf1), and the node-attribute join is the
     // shape that survives when the shard map is a real table instead
@@ -1274,10 +1223,8 @@ object Graph {
   }
 
   def modularity(edges: DataFrame, communities: DataFrame,
-                 singletonOffset: Long = 1000000L,
-                 edgesDistinct: Boolean = false): DataFrame = {
-    val per = communityEdgeStats(edges, communities, singletonOffset,
-      edgesDistinct)
+                 singletonOffset: Long = 1000000L): DataFrame = {
+    val per = communityEdgeStats(edges, communities, singletonOffset)
     val tot = per.agg(sum(col("degree_sum")).as("t"),
       sum(col("within2")).as("sw"),
       sum(col("degree_sum") * col("degree_sum")).as("sdd"))
@@ -1319,10 +1266,8 @@ object Graph {
     */
   def wlColors(edges: DataFrame, rounds: Int = 2,
                maxDegree: Int = 1000,
-               localEdgeCap: Long = 2000000L,
-               edgesDistinct: Boolean = false): DataFrame = {
-    val (sym, frames) = wlRefine(edges, rounds, maxDegree, localEdgeCap,
-      edgesDistinct)
+               localEdgeCap: Long = 2000000L): DataFrame = {
+    val (sym, frames) = wlRefine(edges, rounds, maxDegree, localEdgeCap)
     // The color frames are self-contained on both paths (driver-built
     // locals / eager checkpoints); this reader never touches sym (r17
     // cache-hygiene — it was the one resident orphan here).
@@ -1344,14 +1289,10 @@ object Graph {
     * [[triangles]]' scaffolding note).
     */
   private def wlRefine(edges: DataFrame, rounds: Int, maxDegree: Int,
-                       localEdgeCap: Long = 2000000L,
-                       edgesDistinct: Boolean = false)
+                       localEdgeCap: Long = 2000000L)
       : (DataFrame, Seq[DataFrame]) = {
     import graft.functions.TextOps
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = if (edgesDistinct) sel0 else sel0.distinct()
+    val e = edges.select(col("a"), col("b"))
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint()
@@ -1405,10 +1346,8 @@ object Graph {
     */
   def wlClasses(edges: DataFrame, rounds: Int = 2,
                 maxDegree: Int = 1000, k: Int = 20,
-                localEdgeCap: Long = 2000000L,
-                edgesDistinct: Boolean = false): DataFrame = {
-    val (sym, frames) = wlRefine(edges, rounds, maxDegree, localEdgeCap,
-      edgesDistinct)
+                localEdgeCap: Long = 2000000L): DataFrame = {
+    val (sym, frames) = wlRefine(edges, rounds, maxDegree, localEdgeCap)
     LocalFinish.release(sym) // unused by this reader — see wlColors
     frames.last.groupBy(col("c").as("color"))
       .agg(count(lit(1)).as("n_nodes"),
@@ -1446,15 +1385,11 @@ object Graph {
     * sort.
     */
   def adamicAdar(edges: DataFrame, maxHubDegree: Int = 1000,
-                 k: Int = 100,
-                 edgesDistinct: Boolean = false): DataFrame = {
+                 k: Int = 100): DataFrame = {
     // Three consumers of the (possibly expensive) edge chain: the two
     // wedge legs and the anti-join. Cache, then release after the
     // node-bounded result materializes (r9 advisor discipline).
-    // edgesDistinct: see [[pageRank]] — by-construction-distinct
-    // callers only.
-    val sel0 = edges.select(col("a"), col("b"))
-    val e = (if (edgesDistinct) sel0 else sel0.distinct()).cache()
+    val e = edges.select(col("a"), col("b")).cache()
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = sym.groupBy(col("src").as("node"))
@@ -1517,6 +1452,8 @@ object Graph {
     * start, n_new_edges, new_weight): deterministic whether or not
     * the forest has converged by round `rounds`; a converged graph
     * shows n_groups = #components and n_new_edges = 0 at the tail.
+    * Input: CANONICAL (src, dst, w) edges — src < dst, no self-loops,
+    * one integer w per pair.
     *
     * Scale shape per round: two keyed joins of the |V|-row label
     * frame onto the LIVE edge frontier (NO broadcast hints — labels
@@ -1545,23 +1482,10 @@ object Graph {
     */
   def boruvkaTrace(edges: DataFrame, rounds: Int = 8,
                    propSteps: Int = 2, localGroupCap: Long = 10000L,
-                   localEdgeCap: Long = 500000L,
-                   edgesCanonical: Boolean = false): DataFrame = {
+                   localEdgeCap: Long = 500000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // edgesCanonical = true skips the canonicalizing aggregate —
-    // callers may set it ONLY when the edge frame is already
-    // loop-free, src < dst, one weight per pair by construction
-    // ([[supplierAffinityEdges]]: sorted-set pair fold + pair
-    // aggregate). Same r17 §2.4 cut as the edgesDistinct family:
-    // the re-canonicalization was one full edge shuffle per query.
-    val eSel = edges.select(col("src"), col("dst"), col("w"))
-    val e = (if (edgesCanonical) eSel
-             else eSel
-               .filter(col("src") =!= col("dst"))
-               .groupBy(least(col("src"), col("dst")).as("src"),
-                 greatest(col("src"), col("dst")).as("dst"))
-               .agg(min(col("w")).as("w")))
+    val e = edges.select(col("src"), col("dst"), col("w"))
       .localCheckpoint()
     val sym = e.unionByName(e.select(col("dst").as("src"),
       col("src").as("dst"), col("w"))).localCheckpoint()

@@ -139,7 +139,8 @@ object Itemsets {
 
   /** Co-occurrence GRAPH edges (a < b): pairs co-appearing in ≥
     * `minPairSupport` baskets — the substrate for triangle counting /
-    * clustering over the co-occurrence structure.
+    * clustering over the co-occurrence structure. An edge set: the
+    * final (a, b) aggregate emits each pair once.
     *
     * Unlike [[frequentPairs]]/[[associationRules]], the edge readout
     * carries NO per-item counts, so (r16, VERDICT r15 #2 — this

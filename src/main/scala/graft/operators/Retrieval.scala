@@ -157,10 +157,9 @@ object Retrieval {
       .distinct()
     val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-    // sym is distinct by construction (distinct a < b pairs, disjoint
-    // direction branches) — skip pageRank's defensive re-distinct
-    // (r17 §2.4 cut).
-    Graph.pageRank(sym, iters, edgesDistinct = true)
+    // sym is the edge set pageRank requires: distinct a < b pairs,
+    // emitted once per direction, so the two branches never overlap.
+    Graph.pageRank(sym, iters)
       .orderBy(col("pr").desc, col("node").asc)
       .limit(k)
       .select(col("node").as("token"), col("pr"))

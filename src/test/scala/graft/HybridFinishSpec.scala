@@ -296,4 +296,58 @@ class HybridFinishSpec extends SparkSpec {
       Graph.boruvkaTrace(e, rounds = 6),
       Graph.boruvkaTrace(e, rounds = 6, localGroupCap = 0L))
   }
+
+  test("graph hybrid gates at the cap boundary: cap = n-1, n, n+1 " +
+    "match the distributed result, and the driver finish starts at n") {
+    // n is the row count each gate compares with the cap: the caller's
+    // edge rows, except wlColors, whose gate counts the symmetrized
+    // pairs (2 x the a < b input). The seed frames stay far below n,
+    // so the edge gate is the binding one. The stderr path line shows
+    // which side of the boundary each run took.
+    val e = randomEdges(139, 200)
+    val d = randomPairs(149, 200)
+      .filter(col("doc_a") =!= col("doc_b"))
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")).distinct()
+    val p = randomPairs(151, 200)
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a").as("a"), col("doc_b").as("b")).distinct()
+    val seeds = Seq(0L, 17L).toDF("node")
+    val labels = Seq((0L, 10L), (3L, 20L)).toDF("node", "label")
+    val (nE, nD, nP) = (e.count(), d.count(), p.count())
+    val gates: Seq[(String, Long, Long => DataFrame, String)] = Seq(
+      ("pageRank", nE, c => Graph.pageRank(e, 2, localEdgeCap = c),
+        "[graft] pageRank: driver finish"),
+      ("personalizedPageRank", nE,
+        c => Graph.personalizedPageRank(e, seeds, 2, localEdgeCap = c),
+        "[graft] personalizedPageRank: driver finish"),
+      ("hits", nD, c => Graph.hits(d, 2, localEdgeCap = c),
+        "[graft] hits: driver finish"),
+      ("bfsHops", nE, c => Graph.bfsHops(e, seeds, 3, localEdgeCap = c),
+        "[graft] bfsHops: driver finish"),
+      ("diameterTwoSweep", nE,
+        c => Graph.diameterTwoSweep(e, seeds, 4, localEdgeCap = c),
+        "[graft] diameterTwoSweep: driver finish"),
+      ("labelPropagation", nE,
+        c => Graph.labelPropagation(e, labels, 2, localEdgeCap = c),
+        "[graft] labelPropagation: driver finish"),
+      ("kCore", nE, c => Graph.kCore(e, 3, localEdgeCap = c),
+        "driver finish after 0)"),
+      ("kTruss", nP, c => Graph.kTruss(p, 3, localEdgeCap = c),
+        "driver finish after 0)"),
+      ("wlColors", 2 * nP, c => Graph.wlColors(p, 2, localEdgeCap = c),
+        "[graft] wlRefine: driver finish"))
+    for ((name, n, run, driverLine) <- gates) {
+      val dist = run(0L)
+      val distRows = sorted(dist)
+      for (cap <- Seq(n - 1, n, n + 1)) {
+        val err = new java.io.ByteArrayOutputStream()
+        val out = Console.withErr(err)(run(cap))
+        assert(out.schema.map(f => (f.name, f.dataType)) ===
+          dist.schema.map(f => (f.name, f.dataType)), s"$name at cap $cap")
+        assert(sorted(out) === distRows, s"$name at cap $cap, n = $n")
+        assert(err.toString.contains(driverLine) === (cap >= n),
+          s"$name at cap $cap, n = $n: ${err.toString}")
+      }
+    }
+  }
 }

@@ -243,78 +243,38 @@ class Round17OpsSpec extends SparkSpec {
     assert(viaPrefix === viaExact && viaPrefix.nonEmpty)
   }
 
-  test("edgesDistinct = true is output-identical across the graph " +
-    "family on by-construction-distinct substrates (r17 §2.4 cut)") {
-    import graft.operators.Graph
+  // Graph operators use their edge frame as given (Graph's scaladoc):
+  // each production edge builder must hand them a set of rows.
+  test("production graph edge builders return sets at sf0.001 " +
+    "(purchaseEdges, directedPurchaseEdges, pairEdges, q_kcore's " +
+    "symmetrized pairs)") {
+    import graft.operators.{Graph, Itemsets}
     val d = "/root/testdata/sf0.001"
     val o = graft.queries.Tables.orders(spark, d)
     val li = graft.queries.Tables.lineitem(spark, d)
-    val pe = Graph.purchaseEdges(o, li)
-    val de = Graph.directedPurchaseEdges(o, li)
-    val seeds = graft.queries.Tables.supplier(spark, d)
-      .filter(col("s_suppkey") % 5 === 0)
-      .select((col("s_suppkey") * 2L + 1L).as("node"))
-    val lseeds = graft.queries.Tables.supplier(spark, d)
-      .filter(col("s_suppkey") % 5 === 0)
-      .select((col("s_suppkey") * 2L + 1L).as("node"),
-        col("s_nationkey").cast("long").as("label"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Graph.pageRank(pe, edgesDistinct = true)) ===
-      rows(Graph.pageRank(pe)))
-    assert(rows(Graph.personalizedPageRank(pe, seeds,
-      edgesDistinct = true)) ===
-      rows(Graph.personalizedPageRank(pe, seeds)))
-    assert(rows(Graph.bfsHops(pe, seeds, edgesDistinct = true)) ===
-      rows(Graph.bfsHops(pe, seeds)))
-    assert(rows(Graph.diameterTwoSweep(pe, seeds,
-      edgesDistinct = true)) ===
-      rows(Graph.diameterTwoSweep(pe, seeds)))
-    assert(rows(Graph.hits(de, edgesDistinct = true)) ===
-      rows(Graph.hits(de)))
-    val lpNew = Graph.labelPropagation(pe, lseeds, edgesDistinct = true)
-    val lpOld = Graph.labelPropagation(pe, lseeds)
-    assert(rows(lpNew) === rows(lpOld))
-    assert(rows(Graph.modularity(pe, lpNew, edgesDistinct = true)) ===
-      rows(Graph.modularity(pe, lpOld)))
-    assert(rows(Graph.conductance(pe, lpNew, edgesDistinct = true)) ===
-      rows(Graph.conductance(pe, lpOld)))
-    assert(rows(Graph.hashShardCut(pe, edgesDistinct = true)) ===
-      rows(Graph.hashShardCut(pe)))
+    val p = Itemsets.pairEdges(li, "l_orderkey", "l_partkey")
+    val builders = Seq(
+      "purchaseEdges" -> Graph.purchaseEdges(o, li),
+      "directedPurchaseEdges" -> Graph.directedPurchaseEdges(o, li),
+      "pairEdges" -> p,
+      "symmetrized pairEdges" ->
+        p.select(col("a").as("src"), col("b").as("dst"))
+          .unionByName(p.select(col("b").as("src"), col("a").as("dst"))))
+    for ((name, e) <- builders) {
+      val n = e.count()
+      assert(n > 0, s"$name is empty")
+      assert(e.distinct().count() === n, s"$name repeats a row")
+    }
   }
 
-  test("edgesDistinct/edgesCanonical wave 2: pairEdges-fed graph ops " +
-    "and the Borůvka canonical skip are output-identical") {
-    import graft.operators.{Graph, Itemsets}
-    val d = "/root/testdata/sf0.001"
-    val li = graft.queries.Tables.lineitem(spark, d)
-    val p = Itemsets.pairEdges(li, "l_orderkey", "l_partkey")
-    val sym = p.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(p.select(col("b").as("src"), col("a").as("dst")))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Graph.triangles(p, edgesDistinct = true)) ===
-      rows(Graph.triangles(p)))
-    assert(rows(Graph.kTruss(p, k = 3, edgesDistinct = true)) ===
-      rows(Graph.kTruss(p, k = 3)))
-    assert(rows(Graph.kCore(sym, 3, edgesDistinct = true)) ===
-      rows(Graph.kCore(sym, 3)))
-    assert(rows(Graph.clusteringCoefficient(p, edgesDistinct = true)) ===
-      rows(Graph.clusteringCoefficient(p)))
-    assert(rows(Graph.assortativity(p, edgesDistinct = true)) ===
-      rows(Graph.assortativity(p)))
-    assert(rows(Graph.degreeGini(p, edgesDistinct = true)) ===
-      rows(Graph.degreeGini(p)))
-    assert(rows(Graph.hubShare(p, edgesDistinct = true)) ===
-      rows(Graph.hubShare(p)))
-    assert(rows(Graph.wlColors(p, edgesDistinct = true)) ===
-      rows(Graph.wlColors(p)))
-    assert(rows(Graph.wlClasses(p, edgesDistinct = true)) ===
-      rows(Graph.wlClasses(p)))
-    assert(rows(Graph.adamicAdar(p, edgesDistinct = true)) ===
-      rows(Graph.adamicAdar(p)))
-    val aff = Graph.supplierAffinityEdges(li)
-    assert(rows(Graph.boruvkaTrace(aff, edgesCanonical = true)) ===
-      rows(Graph.boruvkaTrace(aff)))
+  test("supplierAffinityEdges is canonical at sf0.001: src < dst on " +
+    "every row, no (src, dst) pair repeats") {
+    import graft.operators.Graph
+    val e = Graph.supplierAffinityEdges(
+      graft.queries.Tables.lineitem(spark, "/root/testdata/sf0.001"))
+    val n = e.count()
+    assert(n > 0)
+    assert(e.filter(col("src") >= col("dst")).count() === 0L)
+    assert(e.select(col("src"), col("dst")).distinct().count() === n)
   }
 }
